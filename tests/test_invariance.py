@@ -17,6 +17,9 @@ from pyspark.sql import functions as F
 from time_series_db_spark.operators import binary, grouping, ordering, windows
 from time_series_db_spark.sources import DEFAULT_STEP_MS, fetch_events
 
+#: property/fuzz/invariance sweep: the slow tier
+pytestmark = pytest.mark.slow
+
 
 def _op_sum(sf):
     return grouping.sum_(sf, ["name", "region"], exact=True)

@@ -12,6 +12,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+#: property/fuzz/invariance sweep: the slow tier
+pytestmark = pytest.mark.slow
+
 _STAGES = [
     "abs", "logarithm", "sqrt", "scale", "divideScalar", "offset",
     "round", "scaleToSeconds", "timeshift", "where", "tagCompare",

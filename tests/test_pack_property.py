@@ -12,6 +12,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+#: property/fuzz/invariance sweep: the slow tier
+pytestmark = pytest.mark.slow
+
 _doc_lists = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=10_000),

@@ -18,6 +18,7 @@ def _embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+@pytest.mark.slow
 def test_bucketed_neardup_subset_of_exact(spark, sf_dir):
     embs = _embs(spark, sf_dir)
     exact = {
@@ -208,6 +209,7 @@ def test_cosine_topk_arrow_matches_exact(spark, sf_dir):
     assert all(r.query_id != r.neighbor_id for r in arrow)
 
 
+@pytest.mark.slow
 def test_zero_vector_does_not_crash_cosine_paths(spark):
     """A zero embedding must yield NULL cosine (no direction), not an
     ANSI DIVIDE_BY_ZERO crash — across exact top-k, near-dup pairs, and

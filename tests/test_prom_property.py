@@ -15,6 +15,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+#: property/fuzz/invariance sweep: the slow tier
+pytestmark = pytest.mark.slow
+
 H = 3_600_000
 T0 = 1_704_067_200_000
 KEYS = ["job", "inst", "env"]

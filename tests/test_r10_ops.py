@@ -664,6 +664,7 @@ def _cls_docs(spark, n=80, seed_tok=("alpha", "beta", "gamma")):
     return spark.createDataFrame(rows, "doc_id long, text string, y int")
 
 
+@pytest.mark.slow
 def test_classifier_learns_planted_separation(spark):
     from time_series_db_spark.pipeline import classifier
 
@@ -690,6 +691,7 @@ def test_classifier_learns_planted_separation(spark):
     assert min(good) > max(bad) + 0.2
 
 
+@pytest.mark.slow
 def test_classifier_model_survives_parquet_roundtrip(spark, tmp_path):
     """The model table is the persisted artifact: scoring under the
     parquet round-tripped weights must be row-identical."""
@@ -727,6 +729,7 @@ def test_classifier_empty_doc_still_scores(spark):
     assert len(out) == 1 and out[0]["doc_id"] == 999
 
 
+@pytest.mark.slow
 def test_classifier_xxhash64_path_matches_md5_accuracy(spark):
     """The production hash changes bucket assignments but not
     learnability: both paths must fully separate the planted corpus."""
@@ -1368,6 +1371,7 @@ def _toy_vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
+@pytest.mark.slow
 def test_ivf_model_matches_inline_fit(spark):
     """Searching a pre-built ivf_fit index must return EXACTLY what the
     inline corpus= path returns — the split changes which side pays the
@@ -1578,6 +1582,7 @@ def test_token_budget_matches_python_replay(spark):
     assert mass["a"] <= 40 and mass["b"] <= 25
 
 
+@pytest.mark.slow
 def test_token_budget_bucketing_is_pure_parallelism(spark):
     """n_buckets must not change the result: the bucket-threshold path
     (only the boundary bucket sorts) equals the full-sort degenerate
@@ -1613,6 +1618,7 @@ def test_token_budget_small_stratum_and_guards(spark):
         pack.sample_token_budget(docs, {"a": 5}, n_buckets=0)
 
 
+@pytest.mark.slow
 def test_ivf_update_equals_frozen_reassign(spark, monkeypatch):
     """update(fit(A), B) must equal assigning A∪B under fit(A)'s
     FROZEN centroids — centroids untouched, replaced ids win, and the

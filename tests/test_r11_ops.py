@@ -115,6 +115,7 @@ def test_doc_ingest_inbatch_survivors_are_component_min(spark, tmp_path):
     assert batch_kept == kept
 
 
+@pytest.mark.slow
 def test_doc_ingest_per_batch_cost_is_model_size_invariant(spark, tmp_path):
     """Throughput certification of the incremental-crawl claim
     ("per-batch cost ∝ batch, never the accumulated corpus"): the same
@@ -267,6 +268,7 @@ def test_ivf_kmeans_topk_rejects_fit_knobs_in_model_mode(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_classifier_entries_share_one_fit(spark, sf_dir, monkeypatch):
     """Both classifier catalog entries train the IDENTICAL deterministic
     model; the per-corpus-dir memo must make the second entry reuse it

@@ -58,6 +58,7 @@ def test_changed_clips_to_actual_grid_extent(spark):
     assert [r["ts"] for r in out] == [0, 3000, 6000]
 
 
+@pytest.mark.slow
 def test_embedding_cosine_oracle_parity_beyond_512_vectors(spark):
     """ADVICE r11 (catalog_pipeline.py:410): the Spark side auto-scales
     planes_per_band with the corpus while the old oracle was pinned to
@@ -152,6 +153,7 @@ def test_ivf_update_intra_delta_conflict_is_deterministic(spark):
     assert rows[0]["vector"] == [9.0, 9.0]
 
 
+@pytest.mark.slow
 def test_ivf_kmeans_model_mode_rejects_only_explicit_fit_knobs(spark):
     """ADVICE r11 (ann.py:439): the guard must not compare against
     hardcoded default literals — omitted knobs pass, ANY explicitly
@@ -194,6 +196,7 @@ def _wire_lines(fmt: str, n: int, ts0: int, series: int = 50) -> str:
     return "\n".join(out) + "\n"
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("fmt", ["exposition", "lineprotocol", "graphite"])
 def test_wire_ingest_per_batch_cost_is_store_size_invariant(
     spark, tmp_path, fmt

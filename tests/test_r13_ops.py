@@ -248,6 +248,7 @@ def _stateful_median_batch(spark, tmp_path, tag, build_query, accum_text,
     return statistics.median(times[1:])  # first fresh run absorbs JIT
 
 
+@pytest.mark.slow
 def test_streaming_cusum_per_batch_cost_is_history_invariant(
     spark, tmp_path
 ):
@@ -297,6 +298,7 @@ def test_streaming_cusum_per_batch_cost_is_history_invariant(
     print(f"\ncusum per-batch: {t_small:.2f}s @2k -> {t_big:.2f}s @20k")
 
 
+@pytest.mark.slow
 def test_streaming_sessionize_per_batch_cost_is_history_invariant(
     spark, tmp_path
 ):
@@ -481,6 +483,7 @@ def test_ivf_assign_hier_routes_clustered_data_exactly(spark):
     assert agree / len(exact) >= 0.95, agree / len(exact)
 
 
+@pytest.mark.slow
 def test_semantic_dedup_hierarchical_path_partitions_fully(spark):
     """Above HIER_ASSIGN_MIN_NLIST semantic_dedup runs the two-level
     assignment end-to-end: deterministic, every vector lands in exactly
@@ -508,6 +511,7 @@ def test_semantic_dedup_hierarchical_path_partitions_fully(spark):
     assert {i % 12 for i in ids} == set(range(12))  # every cluster survives
 
 
+@pytest.mark.slow
 def test_ivf_fit_auto_nlist_and_hier_search_contract(spark):
     """ivf_fit(nlist='auto') sizes the index for its corpus (16 floor
     at small n, identical tables to explicit nlist=16), and

@@ -275,6 +275,7 @@ def test_exposition_roundtrip_adversarial_labels(spark):
     assert a == b
 
 
+@pytest.mark.slow
 @settings(
     max_examples=30,
     deadline=None,
@@ -362,6 +363,7 @@ def test_line_protocol_roundtrip_adversarial_tags(spark):
     assert a == b
 
 
+@pytest.mark.slow
 @settings(
     max_examples=30,
     deadline=None,

@@ -191,6 +191,7 @@ _wire_lines = _st.lists(
 )
 
 
+@pytest.mark.slow
 @_settings(
     max_examples=25,
     deadline=None,
@@ -276,19 +277,17 @@ def test_pq_adc_rejects_sparse_codebooks(spark):
         ).collect()
 
 
-def test_pq_adc_guards_query_count(spark):
+def test_pq_adc_guards_query_count(spark, monkeypatch):
     from time_series_db_spark.pipeline import ann
 
     corpus = _vec_df(spark, range(40))
     queries = _vec_df(spark, range(12))
-    with pytest.raises(ValueError, match="max_queries"):
-        ann.pq_adc_topk(
-            corpus, queries, m=4, k=8, dims=8, max_queries=10
-        )
-    # explicit override allows it (plan construction succeeds)
-    out = ann.pq_adc_topk(
-        corpus, queries, m=4, k=8, train_iters=1, dims=8, max_queries=None
-    )
+    monkeypatch.setattr(ann, "MAX_ADC_QUERIES", 11)
+    with pytest.raises(ValueError, match="MAX_ADC_QUERIES=11"):
+        ann.pq_adc_topk(corpus, queries, m=4, k=8, dims=8)
+    # at the cap the plan builds (the constant is read per call)
+    monkeypatch.setattr(ann, "MAX_ADC_QUERIES", 12)
+    out = ann.pq_adc_topk(corpus, queries, m=4, k=8, train_iters=1, dims=8)
     assert out.columns == ["query_id", "neighbor_id", "rank", "adc_dist"]
 
 
@@ -463,6 +462,7 @@ def _bfd_replay(items, budget):
     return assign
 
 
+@pytest.mark.slow
 @settings(
     max_examples=10,
     deadline=None,

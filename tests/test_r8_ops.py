@@ -66,7 +66,7 @@ def test_bpe_200_merges_completes(spark):
     assert analyzed.count("replace(") <= bpe._CHECKPOINT_EVERY
 
 
-def test_hard_negatives_anchor_guard(spark):
+def test_hard_negatives_anchor_guard(spark, monkeypatch):
     """The flat miner broadcasts the full anchor set — above
     MAX_HN_ANCHORS it must refuse with a pointer at the celled path
     instead of silently shipping a multi-GB broadcast."""
@@ -76,11 +76,12 @@ def test_hard_negatives_anchor_guard(spark):
     embs = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label long"
     )
+    monkeypatch.setattr(ann, "MAX_HN_ANCHORS", 29)
     with pytest.raises(ValueError, match="hard_negatives_ivf"):
-        ann.hard_negatives(embs, embs, k=2, max_queries=10)
-    # explicit override still works
-    out = ann.hard_negatives(embs, embs.limit(3), k=2, max_queries=None)
-    assert out.count() > 0
+        ann.hard_negatives(embs, embs, k=2)
+    # at the cap it mines (the constant is read per call)
+    monkeypatch.setattr(ann, "MAX_HN_ANCHORS", 30)
+    assert ann.hard_negatives(embs, embs, k=2).count() > 0
 
 
 def test_hard_negatives_ivf_labels_differ(spark):

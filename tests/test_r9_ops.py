@@ -150,17 +150,19 @@ def _mmr_fixture(spark):
     return short, embs
 
 
-def test_mmr_rerank_refuses_oversized_shortlist(spark):
-    """The n² sims self-join needs a metadata-sized shortlist; past
+def test_mmr_rerank_refuses_oversized_shortlist(spark, monkeypatch):
+    """The coordinator selection needs a metadata-sized shortlist; past
     MAX_MMR_SHORTLIST it must refuse with a pointer at the top-n cut
     (same contract as ann.hard_negatives / MAX_HN_ANCHORS)."""
     from time_series_db_spark.pipeline import retrieval
 
     short, embs = _mmr_fixture(spark)
-    with pytest.raises(ValueError, match="max_shortlist"):
-        retrieval.mmr_rerank(short, embs, k=2, max_shortlist=3)
-    # explicit opt-out still works
-    out = retrieval.mmr_rerank(short, embs, k=2, max_shortlist=None)
+    monkeypatch.setattr(retrieval, "MAX_MMR_SHORTLIST", 5)
+    with pytest.raises(ValueError, match="top-n"):
+        retrieval.mmr_rerank(short, embs, k=2)
+    # at the cap it selects (the constant is read per call)
+    monkeypatch.setattr(retrieval, "MAX_MMR_SHORTLIST", 6)
+    out = retrieval.mmr_rerank(short, embs, k=2)
     assert len(out.collect()) == 2
 
 

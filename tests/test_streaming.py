@@ -1901,6 +1901,7 @@ def test_query_range_rejects_nonpositive_step(spark):
             service.promql_query(src, "error", EVENTS_MIN_TS, step)
 
 
+@pytest.mark.slow
 def test_doc_ingest_dedups_across_batches(spark, tmp_path):
     """Streaming incremental-crawl loop (streaming/docs.py): batch 1
     seeds the store + model (in-batch near-dup dropped, min-id wins);

@@ -25,6 +25,15 @@ later recomputes from lineage (correctness never depends on the cache).
 
 Frames are deduplicated within a scope by ``DataFrame.semanticHash`` so
 an N-times-re-run query tracks one handle per distinct plan, not N.
+
+Bounded collect: a coordinator kernel (BPE trainer, union-find, MMR)
+runs in Python only over a provably small frame.  :func:`bounded_rows`
+is that one action — ``limit(bound + 1).collect()``, or ``None`` when
+the frame is over the bound (the caller then goes distributed or
+raises); :func:`within_bound` is the memoised count for guards that
+never need the rows.  Dirty-input policy (dropping NULL graph
+endpoints, say) is applied before the bound, so both paths see the
+same rows.
 """
 
 from __future__ import annotations
@@ -86,6 +95,22 @@ def probe_memo(dfs, kind: str, compute):
     if key not in memo:
         memo[key] = compute()
     return memo[key]
+
+
+def bounded_rows(df: DataFrame, bound: int) -> list | None:
+    """``df``'s rows when it has at most ``bound`` of them, else ``None``
+    — one action, which reads at most ``bound + 1`` rows."""
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None
+
+
+def within_bound(df: DataFrame, bound: int, kind: str) -> bool:
+    """Whether ``df`` has at most ``bound`` rows, by a bounded count
+    memoised per scope like any other probe (keyed by the bound too)."""
+    n = probe_memo(
+        df, f"{kind}<={bound}", lambda: df.limit(bound + 1).count()
+    )
+    return n <= bound
 
 
 def _release_scope(scope: str, blocking: bool) -> int:

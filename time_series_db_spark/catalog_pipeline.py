@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from time_series_db_spark.catalog import ORACLES, quant, register, sql_quant
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import ann, dedup, multimodal, text, textprep
 from time_series_db_spark.pipeline.textprep import (
     FP_BASE,
@@ -4250,8 +4251,8 @@ def _cls_model(spark, sf_dir):
         _CLS_MODEL_ROWS[key] = [
             (r["bucket"], r["w_nano"]) for r in model.collect()
         ]
-    return spark.createDataFrame(
-        _CLS_MODEL_ROWS[key], "bucket long, w_nano long"
+    return literal_frame(
+        spark, _CLS_MODEL_ROWS[key], "bucket long, w_nano long"
     )
 
 

@@ -26,33 +26,11 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.cache import within_bound
+from time_series_db_spark.literals import lit_array, literal_frame
 from time_series_db_spark.pipeline.dedup import cosine_expr
 
 NUM_PLANES = 8
-
-
-def _lit_array(vals, elem_type: str = "double") -> Column:
-    """One-call array literal via SQL text.  A per-element
-    ``F.array(*[F.lit(v) ...])`` build costs one py4j round trip PER
-    ELEMENT — the d(d+1)/2-sized PCA index LUTs (2080 entries each)
-    spent ~1.5 s of driver time per plan build on literal construction
-    alone (r14 profiling).  ``repr`` round-trips doubles exactly;
-    non-finite values render through ``double('...')``."""
-
-    def _d(v: float) -> str:
-        if v != v or v in (float("inf"), float("-inf")):
-            return f"double('{v}')"
-        return repr(v) + "D"
-
-    if elem_type == "double":
-        body = ",".join(_d(float(v)) for v in vals)
-    elif elem_type == "int":
-        body = ",".join(str(int(v)) for v in vals)
-    elif elem_type == "bigint":
-        body = ",".join(f"{int(v)}L" for v in vals)
-    else:  # pragma: no cover - guard against silent mistypes
-        raise ValueError(f"unsupported literal array type {elem_type!r}")
-    return F.expr(f"array({body})").cast(f"array<{elem_type}>")
 
 
 def _plane_weight(plane: int, dim_col: Column) -> Column:
@@ -717,8 +695,10 @@ def cosine_topk_arrow(
         F.col(id_col), _as_double(F.col(vec_col)).alias("__qv")
     ).collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, cosine double"
+        return literal_frame(
+            corpus.sparkSession,
+            [],
+            "query_id long, neighbor_id long, rank long, cosine double",
         )
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
     qm = np.array([r["__qv"] for r in q_rows], dtype=np.float64)
@@ -872,7 +852,7 @@ def project_jl(
     v = _as_double(F.col(vec_col))
     cols = []
     for j in range(d_out):
-        signs = _lit_array([float(r[i][j]) for i in range(d_in)])
+        signs = lit_array([float(r[i][j]) for i in range(d_in)])
         dot = F.aggregate(
             F.zip_with(v, signs, lambda x, s: x * s),
             F.lit(0.0),
@@ -952,8 +932,8 @@ def pca_cov_frame(
         .groupBy("i")
         .agg(F.sum("__x").alias("sxi"))
     )
-    i_lut = _lit_array(iu, "int")
-    j_lut = _lit_array(ju, "int")
+    i_lut = lit_array(iu, "int")
+    j_lut = lit_array(ju, "int")
     flat = (
         partials.select(F.posexplode("psxx").alias("k", "__x"))
         .groupBy("k")
@@ -1057,12 +1037,12 @@ def pca_transform(
     mean = model["mean"]
     centered = F.zip_with(
         v,
-        _lit_array([float(m) for m in mean]),
+        lit_array([float(m) for m in mean]),
         lambda x, m: x - m,
     )
     cols = []
     for k, comp in enumerate(model["components"]):
-        basis = _lit_array([float(c) for c in comp])
+        basis = lit_array([float(c) for c in comp])
         dot = F.aggregate(
             F.zip_with(centered, basis, lambda x, c: x * c),
             F.lit(0.0),
@@ -1375,7 +1355,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int | None = None,
-    max_queries: int | None = MAX_ADC_QUERIES,
 ) -> DataFrame:
     """PQ search with Asymmetric Distance Computation: queries stay
     exact; each query precomputes an m×k lookup table of sub-distances
@@ -1389,19 +1368,16 @@ def pq_adc_topk(
     not 512), the distance is pure codegen arithmetic, and the top-k is
     a per-query rank window over scored candidates — the same partial
     WindowGroupLimit cut as the exact path.  Recall vs exact L2 is
-    pinned by a unit-test gate.
+    pinned by a unit-test gate.  More than :data:`MAX_ADC_QUERIES`
+    queries raise ``ValueError``.
     """
-    if max_queries is not None:
-        # bounded probe: LIMIT max+1 caps the work regardless of size
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"pq_adc_topk is a flat O(corpus × queries) ADC scan "
-                f"with a broadcast per-query LUT; the query set exceeds "
-                f"max_queries={max_queries}. Use ivfpq_topk (celled "
-                f"scan) for large query sets, or pass max_queries "
-                f"explicitly to override."
-            )
+    if not within_bound(queries, MAX_ADC_QUERIES, "adc_queries"):
+        raise ValueError(
+            f"pq_adc_topk is a flat O(corpus × queries) ADC scan with a "
+            f"broadcast per-query LUT; the query set exceeds "
+            f"MAX_ADC_QUERIES={MAX_ADC_QUERIES}. Use ivfpq_topk (celled "
+            f"scan) for large query sets."
+        )
     vecs = corpus.select(id_col, _as_double(F.col(vec_col)).alias("__v"))
     books = pq_codebooks(
         vecs, m=m, k=k, iters=train_iters, id_col=id_col, dims=dims
@@ -1474,7 +1450,6 @@ def pq_rerank_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int | None = None,
-    max_queries: int | None = MAX_ADC_QUERIES,
 ) -> DataFrame:
     """PQ + exact re-rank — the production billion-scale shape: the ADC
     scan over 2-byte codes nominates a per-query ``shortlist``, then
@@ -1489,7 +1464,7 @@ def pq_rerank_topk(
     short = pq_adc_topk(
         corpus, queries, topk=shortlist, m=m, k=k,
         train_iters=train_iters, id_col=id_col, vec_col=vec_col,
-        dims=dims, max_queries=max_queries,
+        dims=dims,
     ).select("query_id", "neighbor_id")
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1661,7 +1636,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    max_queries: int | None = MAX_HN_ANCHORS,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (the batch-mining
     step of SimCLR/SBERT-style pipelines): for each anchor, the ``k``
@@ -1674,21 +1648,16 @@ def hard_negatives(
     corpus scan is embarrassingly parallel (rebalanced across cores),
     and the top-k is a partial WindowGroupLimit cut — the label
     inequality is applied IN the join condition, so same-label pairs
-    never materialize.  The anchor set is bounded by ``max_queries``
-    (default :data:`MAX_HN_ANCHORS`) — a large anchor set silently
-    turns the broadcast into gigabytes; use :func:`hard_negatives_ivf`
-    there instead."""
-    if max_queries is not None:
-        # bounded probe: LIMIT max+1 caps the work regardless of size
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"hard_negatives is a flat O(corpus × anchors) scan "
-                f"with the full anchor set broadcast; the anchor set "
-                f"exceeds max_queries={max_queries}. Use "
-                f"hard_negatives_ivf (celled scan) for large anchor "
-                f"sets, or pass max_queries explicitly to override."
-            )
+    never materialize.  More than :data:`MAX_HN_ANCHORS` anchors raise
+    ``ValueError`` — a large anchor set silently turns the broadcast
+    into gigabytes; use :func:`hard_negatives_ivf` there instead."""
+    if not within_bound(queries, MAX_HN_ANCHORS, "hn_anchors"):
+        raise ValueError(
+            f"hard_negatives is a flat O(corpus × anchors) scan with the "
+            f"full anchor set broadcast; the anchor set exceeds "
+            f"MAX_HN_ANCHORS={MAX_HN_ANCHORS}. Use hard_negatives_ivf "
+            f"(celled scan) for large anchor sets."
+        )
     spark = corpus.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     c = corpus.select(

@@ -104,38 +104,21 @@ def bpe_train(
     """
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    from time_series_db_spark.cache import persist_tracked
+    from time_series_db_spark.cache import bounded_rows, persist_tracked
 
     wf = persist_tracked(
         _word_freq(docs, text_col).withColumn("__seq", _initial_seq())
     )
-    from time_series_db_spark.cache import probe_memo
-
-    n_words = probe_memo(
-        wf,
-        "bpe_train_bound",
-        lambda: wf.limit(_DRIVER_TRAIN_MAX_WORDS + 1).count(),
-    )
-    if n_words <= _DRIVER_TRAIN_MAX_WORDS:
-        # coordinator path: ONE bounded collect of the cached word
-        # table replaces 2 Spark jobs per merge round; the returned
-        # word table is the same stacked-replace plan over the same
-        # cache the distributed loop would have built
-        rows = wf.select("__f", "__seq").collect()
+    rows = bounded_rows(wf.select("__f", "__seq"), _DRIVER_TRAIN_MAX_WORDS)
+    if rows is not None:
+        # coordinator path: the returned word table is the same
+        # stacked-replace plan over the same cache the distributed loop
+        # would have built
         merges = _train_rounds_local(
             [(int(r["__f"]), r["__seq"]) for r in rows], n_merges
         )
         for i, (_rank, left, right, _freq) in enumerate(merges):
-            wf = wf.withColumn(
-                "__seq",
-                F.replace(
-                    F.col("__seq"),
-                    F.lit(f" {left} {right} "),
-                    F.lit(f" {left}{right} "),
-                ),
-            )
-            if (i + 1) % _CHECKPOINT_EVERY == 0:
-                wf = wf.localCheckpoint(eager=True)
+            wf = _apply_merge(wf, i, left, right)
         return merges, wf
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -149,26 +132,33 @@ def bpe_train(
             break
         left, right = top[0]["__pair"].split(" ")
         merges.append((rank, left, right, int(top[0]["__cnt"])))
-        wf = wf.withColumn(
-            "__seq",
-            F.replace(
-                F.col("__seq"),
-                F.lit(f" {left} {right} "),
-                F.lit(f" {left}{right} "),
-            ),
-        )
-        if (rank + 1) % _CHECKPOINT_EVERY == 0:
-            wf = wf.localCheckpoint(eager=True)
+        wf = _apply_merge(wf, rank, left, right)
     return merges, wf
 
 
-#: word-type bound for COORDINATOR-side training: when a bounded probe
-#: proves the word-frequency table has at most this many rows, the
-#: merge loop runs on the driver over the collected ``(freq, seq)``
-#: pairs — the reference-class trainer shape (word counts in coordinator
-#: memory) — instead of paying 2 Spark jobs per merge round for a table
-#: that is often a few thousand rows.  ≤ ~50 MB of driver strings at
-#: the bound.  Larger vocabularies keep the distributed loop unchanged;
+def _apply_merge(seq: DataFrame, i: int, left: str, right: str):
+    """Apply merge number ``i`` (the literal space-bounded replace) to
+    ``__seq``, truncating lineage every ``_CHECKPOINT_EVERY`` merges."""
+    seq = seq.withColumn(
+        "__seq",
+        F.replace(
+            F.col("__seq"),
+            F.lit(f" {left} {right} "),
+            F.lit(f" {left}{right} "),
+        ),
+    )
+    if (i + 1) % _CHECKPOINT_EVERY == 0:
+        seq = seq.localCheckpoint(eager=True)
+    return seq
+
+
+#: word-type bound for COORDINATOR-side training: when the word-frequency
+#: table has at most this many rows (``cache.bounded_rows``), the merge
+#: loop runs on the driver over the collected ``(freq, seq)`` pairs —
+#: the reference-class trainer shape (word counts in coordinator memory)
+#: — instead of paying 2 Spark jobs per merge round for a table that is
+#: often a few thousand rows.  ≤ ~50 MB of driver strings at the bound.
+#: Larger vocabularies keep the distributed loop unchanged;
 #: both paths run the IDENTICAL algorithm (same replace semantics, same
 #: (count DESC, pair ASC) tie-break), so the choice is invisible in the
 #: result — the DuckDB oracle replays training either way.
@@ -218,16 +208,7 @@ def bpe_segment_words(words: DataFrame, merges) -> DataFrame:
     depth stays bounded via the trainer's checkpoint cadence."""
     seq = words.withColumn("__seq", _initial_seq())
     for i, (_rank, left, right, _freq) in enumerate(merges):
-        seq = seq.withColumn(
-            "__seq",
-            F.replace(
-                F.col("__seq"),
-                F.lit(f" {left} {right} "),
-                F.lit(f" {left}{right} "),
-            ),
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            seq = seq.localCheckpoint(eager=True)
+        seq = _apply_merge(seq, i, left, right)
     return seq
 
 
@@ -326,9 +307,13 @@ def bpe_merges(
     """The merge table as a DataFrame: ``(merge_rank, left_sym,
     right_sym, freq)`` — the BPE model artifact (rank order IS the
     apply order)."""
+    from time_series_db_spark.literals import literal_frame
+
     merges, _ = bpe_train(docs, n_merges, text_col)
-    return docs.sparkSession.createDataFrame(
-        merges, "merge_rank long, left_sym string, right_sym string, freq long"
+    return literal_frame(
+        docs.sparkSession,
+        merges,
+        "merge_rank long, left_sym string, right_sym string, freq long",
     )
 
 

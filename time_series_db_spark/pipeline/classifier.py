@@ -39,6 +39,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline.textprep import hash64, tokens
 
 #: hash seed namespacing classifier buckets away from dedup/simhash
@@ -148,8 +149,8 @@ def classifier_fit(
     )
     w = {b: 0 for b in buckets}
     for _ in range(iters):
-        wdf = spark.createDataFrame(
-            [(b, w[b]) for b in buckets], "bucket long, w_nano long"
+        wdf = literal_frame(
+            spark, [(b, w[b]) for b in buckets], "bucket long, w_nano long"
         )
         pred = (
             ft.join(F.broadcast(wdf), ft["__bucket"] == wdf["bucket"])
@@ -188,8 +189,8 @@ def classifier_fit(
             )
             for b in buckets
         }
-    return spark.createDataFrame(
-        [(b, w[b]) for b in buckets], "bucket long, w_nano long"
+    return literal_frame(
+        spark, [(b, w[b]) for b in buckets], "bucket long, w_nano long"
     )
 
 

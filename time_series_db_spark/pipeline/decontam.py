@@ -144,6 +144,7 @@ def bloom_decontaminate(
         raise ValueError("min_hits must be positive")
 
     from time_series_db_spark.cache import persist_tracked, probe_memo
+    from time_series_db_spark.literals import literal_frame
 
     eval_h = persist_tracked(
         eval_set.select(
@@ -212,13 +213,8 @@ def bloom_decontaminate(
     def probes(gh: Column) -> list[Column]:
         return _probes_for(mask, gh)
 
-    # one-call literal plan (not createDataFrame: an RDD-backed one-row
-    # frame changes the downstream plan identity per call and pays a
-    # per-call materialization; 16384 longs render as one SQL literal)
-    bits = corpus.sparkSession.range(1).select(
-        F.expr(
-            "array(" + ",".join(f"{w}L" for w in bitmap) + ")"
-        ).alias("__bloom")
+    bits = literal_frame(
+        corpus.sparkSession, [(bitmap,)], "__bloom array<bigint>"
     )
 
     grams = (

@@ -926,84 +926,94 @@ def embedding_neardup_pairs(
 #: edge bound for COORDINATOR-side component resolution: verified
 #: near-dup pair sets are banding-budget-bounded (the bench asserts the
 #: celled operators' candidate counts), so the usual case is thousands
-#: of edges — a probe-bounded union-find on the driver replaces
-#: O(diameter) shuffle rounds × (checkpoint job + convergence probe)
-#: with ONE bounded collect.  Above the bound the distributed
-#: min-label-propagation loop runs unchanged (with the edge table
+#: of edges — a union-find over one bounded collect
+#: (``cache.bounded_rows``) replaces O(diameter) shuffle rounds ×
+#: (checkpoint job + convergence probe).  Above the bound the
+#: distributed min-label-propagation loop runs (with the edge table
 #: pinned so rounds re-read one materialization).  Identical output by
-#: construction: component id = minimum reachable node id, and Python
-#: `<` on longs/strings matches Spark's least/min ordering (UTF8 binary
-#: == code-point order).
+#: construction: component id = minimum reachable node id, and the
+#: union-find orders ids like Spark's least/min (UTF8 binary ==
+#: code-point order, one NaN node sorting above every number).
 _CC_COORD_MAX_EDGES = 500_000
+
+#: propagation rounds before the distributed loop raises: enough for
+#: component diameter 19 (near-dup clusters have diameter 2-4)
+_CC_MAX_ROUNDS = 20
+
+
+class ComponentsNotConverged(RuntimeError):
+    """Label propagation was still changing labels at the round cap."""
+
+
+_NAN = float("nan")
+
+
+def _union_find(rows) -> list[tuple]:
+    """``(id, component)`` for every node of the collected ``(a, b)``
+    edges.  Each tree's root is its minimum node, ordered like Spark's
+    least/min: every NaN is one node, above every number."""
+    index: dict = {}
+    ids: list = []
+    parent: list[int] = []
+
+    def node(x) -> int:
+        x = _NAN if x != x else x  # Python NaNs never compare equal
+        if x not in index:
+            index[x] = len(ids)
+            ids.append(x)
+            parent.append(len(parent))
+        return index[x]
+
+    def find(i: int) -> int:
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    def order(i: int) -> tuple:
+        return (ids[i] != ids[i], ids[i])
+
+    for r in rows:
+        lo, hi = sorted((find(node(r["a"])), find(node(r["b"]))), key=order)
+        parent[hi] = lo
+    return [(x, ids[find(i)]) for i, x in enumerate(ids)]
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """(id, component) for every node in the pair graph — component id is
-    the minimum node id reachable from it.
+    the minimum node id reachable from it.  Edges with a NULL endpoint
+    are dropped first, so a NULL id is never a node.
 
-    Min-label propagation: every node starts labeled with itself; each
-    round takes the min of its own label and its neighbors' labels. A
-    round is one shuffle (join + groupBy on node id); convergence needs
-    O(component diameter) rounds, and near-dup clusters are dense
-    (diameter 2-4), so this terminates in a handful of rounds at any
-    corpus size. Each round is localCheckpoint'ed to truncate lineage —
-    iterative joins otherwise compound the plan exponentially. (The
-    production-hardened alternative for adversarial graph shapes is
-    large-star/small-star; the plumbing here is the same joins.)
-
-    When a bounded probe proves the edge set is at most
-    :data:`_CC_COORD_MAX_EDGES` rows, the components are resolved with
-    a driver-side union-find over ONE collect instead — same output,
-    none of the per-round jobs (the reference-coordinator shape, like
-    the BPE trainer and the MMR selection).
+    Up to :data:`_CC_COORD_MAX_EDGES` edges, a driver-side union-find
+    over one bounded collect resolves the components (the
+    reference-coordinator shape, like the BPE trainer and the MMR
+    selection).  Above it, min-label propagation: every node starts
+    labeled with itself; each round takes the min of its own label and
+    its neighbors' labels. A round is one shuffle (join + groupBy on
+    node id) and is localCheckpoint'ed to truncate lineage — iterative
+    joins otherwise compound the plan exponentially. Convergence needs
+    O(component diameter) rounds; past :data:`_CC_MAX_ROUNDS` it raises
+    :class:`ComponentsNotConverged`. (The production-hardened
+    alternative for adversarial graph shapes is large-star/small-star;
+    the plumbing here is the same joins.)
     """
-    from time_series_db_spark.cache import persist_tracked, probe_memo
+    from time_series_db_spark.cache import bounded_rows, persist_tracked
+    from time_series_db_spark.literals import literal_frame
 
     e2 = persist_tracked(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    )
-    n_edges = probe_memo(
-        e2,
-        "cc_edge_bound",
-        lambda: e2.limit(_CC_COORD_MAX_EDGES + 1).count(),
-    )
-    if n_edges <= _CC_COORD_MAX_EDGES:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in e2.collect():
-            a, b = r["a"], r["b"]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp_min: dict = {}
-        for v in parent:
-            rv = find(v)
-            m = comp_min.get(rv)
-            if m is None or v < m:
-                comp_min[rv] = v
-        out = [(v, comp_min[find(v)]) for v in parent]
-        from pyspark.sql.types import StructField, StructType
-
-        idt = e2.schema["a"].dataType
-        schema = StructType(
-            [StructField("id", idt), StructField("comp", idt)]
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+            F.col("a").isNotNull() & F.col("b").isNotNull()
         )
-        return edges.sparkSession.createDataFrame(out, schema)
+    )
+    rows = bounded_rows(e2, _CC_COORD_MAX_EDGES)
+    if rows is not None:
+        idt = e2.schema["a"].dataType.simpleString()
+        schema = f"id {idt}, comp {idt}"
+        return literal_frame(edges.sparkSession, _union_find(rows), schema)
 
     adj = persist_tracked(
         e2.unionByName(
@@ -1012,7 +1022,7 @@ def connected_components(
     )
     nodes = adj.select(F.col("a").alias("id")).distinct()
     labels = nodes.withColumn("comp", F.col("id")).localCheckpoint(eager=True)
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ROUNDS):
         nb_min = (
             adj.join(
                 labels.select(F.col("id").alias("b"), F.col("comp").alias("nc")),
@@ -1040,8 +1050,12 @@ def connected_components(
         )
         labels = new
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise ComponentsNotConverged(
+        f"connected_components: labels still changing after "
+        f"{_CC_MAX_ROUNDS} propagation rounds (a component's diameter "
+        f"exceeds the cap)"
+    )
 
 
 def dedup_survivors(
@@ -1057,7 +1071,7 @@ def dedup_survivors(
     generation (MinHash/SimHash/embedding) feeds it, and its output is
     the deduplicated corpus. One anti-join against the loser set.
     """
-    cc = connected_components(pairs, max_iters=20)
+    cc = connected_components(pairs)
     losers = cc.filter(F.col("comp") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
@@ -1286,7 +1300,7 @@ def soft_dedup_weights(
     left join against that metadata-sized table — broadcast when it
     fits, AQE otherwise, never a corpus self-join.
     """
-    cc = connected_components(pairs, max_iters=20)
+    cc = connected_components(pairs)
     sizes = cc.groupBy("comp").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
@@ -1396,7 +1410,7 @@ def leakage_safe_split(
         acc += float(w)
         cuts.append((name, round(acc * 10000)))
     cuts[-1] = (cuts[-1][0], 10000)
-    cc = connected_components(pairs, max_iters=20)
+    cc = connected_components(pairs)
     assigned = docs.select(id_col).join(
         cc.withColumnRenamed("id", id_col), id_col, "left"
     )

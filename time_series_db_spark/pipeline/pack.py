@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import textprep
 
 #: shards for packing — the unit of window parallelism. At 100 TB this is
@@ -183,8 +184,8 @@ def sample_mixture(
     """
     quotas = apportion(weights, budget)
     spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        [(s, n) for s, n in sorted(quotas.items())], "stratum string, target_n long"
+    qdf = literal_frame(
+        spark, sorted(quotas.items()), "stratum string, target_n long"
     )
     key = F.md5(F.col(id_col).cast("string"))
     w = Window.partitionBy(strata_col).orderBy(key, F.col(id_col))
@@ -241,7 +242,8 @@ def sample_token_budget(
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     bucket_w = (1 << 60) // nb
     spark = df.sparkSession
-    bdf = spark.createDataFrame(
+    bdf = literal_frame(
+        spark,
         [(s, int(b)) for s, b in sorted(budgets.items())],
         "stratum string, budget long",
     )

@@ -383,13 +383,46 @@ def rrf_fuse(
     ).select(id_col, "rrf_score", "n_lists", "rank")
 
 
-#: max shortlist rows for :func:`mmr_rerank` — the pairwise sim table
-#: is n_short² rows and every greedy round is a sequential 1-row
-#: collect, so a 100k-row "shortlist" would be 10¹⁰ sim rows plus 100k
-#: coordinator rounds.  MMR is a POST-retrieval diversifier: cut a
-#: top-n first (bm25_topk / cosine_topk / rrf_fuse) and rerank THAT.
-#: Same bounded-probe discipline as ann.MAX_HN_ANCHORS.
+#: max shortlist rows for :func:`mmr_rerank`, whose greedy rounds run
+#: on the coordinator over the collected vectors.  MMR is a
+#: POST-retrieval diversifier: cut a top-n first (bm25_topk /
+#: cosine_topk / rrf_fuse) and rerank THAT.
 MAX_MMR_SHORTLIST = 2_000
+
+
+def _fold_dot(a: list, b: list) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _cos(a, b) -> float | None:
+    """:func:`dedup.cosine_expr` on the coordinator: the same sequential
+    left fold (Python ``+=`` is the identical IEEE-double fold).  Like
+    ``zip_with`` padding a shorter vector with NULL, a NULL vector, a
+    NULL element or a length mismatch gives NULL; a zero norm gives NULL
+    like ``try_divide``."""
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    denom = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
+    if denom == 0.0:
+        return None
+    return _fold_dot(a, b) / denom
+
+
+def _is_nan(x: float) -> bool:
+    return x != x
+
+
+def _asc(x) -> tuple:
+    """Spark's ascending order as a sort key: NULL first, NaN last."""
+    return (x is not None, x is not None and _is_nan(x), x)
+
+
+def _desc(x) -> tuple:
+    """Spark's descending order for a double: NaN first, NULL last."""
+    return (2, 0.0) if x is None else (0, 0.0) if _is_nan(x) else (1, -x)
 
 
 def mmr_rerank(
@@ -401,7 +434,6 @@ def mmr_rerank(
     rel_col: str = "rel",
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_shortlist: int | None = MAX_MMR_SHORTLIST,
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein 1998):
     diversified top-``k`` selection over a retrieval shortlist —
@@ -412,143 +444,76 @@ def mmr_rerank(
     Returns ``(id, rel, mmr_score, rank)``, rank 1..k, ties on the id.
 
     Scale shape: the shortlist must be metadata-sized (a prior top-n
-    cut) — a bounded probe ENFORCES the contract (``max_shortlist``,
-    default :data:`MAX_MMR_SHORTLIST`): nothing stops a caller passing
-    a raw corpus otherwise.  Within that contract the greedy selection
-    is coordinator work by construction (k·n cosines over ≤ 2000
-    vectors), so it runs driver-side on ONE bounded collect of
-    ``(id, rel, vec)`` — no n² pairwise table, no per-round jobs —
-    with the exact distributed semantics (sequential-left-fold cosine,
-    NULL on zero norms, F.max NULL/NaN ordering, score-desc/id-asc
-    tie-breaks).  Nothing here ever touches the corpus; the shortlist
-    ids broadcast into the embeddings scan exactly once.
+    cut); above :data:`MAX_MMR_SHORTLIST` rows it raises ``ValueError``.
+    Within that contract the greedy selection is coordinator work by
+    construction, so it runs driver-side on ONE bounded collect of
+    ``(id, rel, vec)`` — no n² pairwise table, no per-round jobs — with
+    the distributed semantics: :func:`_cos`, a per-candidate diversity
+    penalty that is a running max skipping NULLs like ``F.max``, and an
+    argmax ordered score DESC (NaN largest, NULL last, as Spark orders
+    doubles) then id ASC.  Nothing here ever touches the corpus; the
+    shortlist ids broadcast into the embeddings scan exactly once.
     """
     if k <= 0 or not 0.0 <= lam <= 1.0:
         raise ValueError("mmr_rerank needs k > 0 and 0 <= lam <= 1")
-    from time_series_db_spark.cache import persist_tracked
+    from time_series_db_spark.cache import bounded_rows, persist_tracked
+    from time_series_db_spark.literals import literal_frame
 
-    # pinned: the bounded probe below and the selection collect read ONE
-    # materialization of the shortlist pipeline (a BM25/fused top-n is
-    # several stages — re-executing it for the probe doubled the cost)
+    cap = MAX_MMR_SHORTLIST
+    # pinned: both sides of the join read ONE materialization of the
+    # shortlist pipeline; the limit bounds the id broadcast however
+    # large the input
     cand = persist_tracked(
         shortlist.select(
             F.col(id_col).alias("__id"),
             F.col(rel_col).cast("double").alias("__rel"),
-        )
+        ).limit(cap + 1)
     )
-    if max_shortlist is not None:
-        # bounded probe: LIMIT max+1 caps the probe's work regardless
-        # of the input's true size (1:1 projection of the shortlist, so
-        # the count is the shortlist's)
-        n_short = cand.limit(max_shortlist + 1).count()
-        if n_short > max_shortlist:
-            raise ValueError(
-                f"mmr_rerank builds an n_shortlist² pairwise-similarity "
-                f"table and runs one coordinator round per selection; "
-                f"the shortlist exceeds max_shortlist={max_shortlist}. "
-                f"Cut a top-n first (bm25_topk / ann.cosine_topk / "
-                f"rrf_fuse), or pass max_shortlist explicitly to "
-                f"override."
-            )
     vecs = embs.select(
         F.col(vec_id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     ).join(F.broadcast(cand.select("__id")), "__id")
-    # The shortlist is probe-ENFORCED coordinator-sized (≤ max_shortlist
-    # rows of (id, rel, d-dim vec) — ~1 MB at the 2000-row cap), so the
-    # greedy selection runs driver-side on ONE bounded collect instead
-    # of persisting an n_shortlist² pairwise-sim table and paying one
-    # distributed argmax job per selected item (r14: 18 jobs → 2 for
-    # k=5).  Bit-identical to the distributed formulation: the cosine
-    # is the same sequential left fold as dedup.cosine_expr/_dot_fold
-    # (Python `+=` is the identical IEEE-double left fold), NULL on a
-    # zero norm like try_divide, the per-candidate diversity penalty is
-    # a running max that skips NULLs like F.max, and the argmax orders
-    # (score DESC with NaN largest — Spark's double ordering — then id
-    # ASC).
-    base_rows = cand.join(vecs, "__id", "left").collect()
+    base_rows = bounded_rows(cand.join(vecs, "__id", "left"), cap)
+    if base_rows is None:
+        raise ValueError(
+            f"mmr_rerank scores every remaining candidate in each "
+            f"coordinator round; the shortlist exceeds "
+            f"MAX_MMR_SHORTLIST={cap}. Cut a top-n first (bm25_topk / "
+            f"ann.cosine_topk / rrf_fuse)."
+        )
 
-    def _fold_dot(a: list, b: list) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def _cos(a, b):
-        if a is None or b is None:
-            return None
-        import math as _m
-
-        denom = _m.sqrt(_fold_dot(a, a)) * _m.sqrt(_fold_dot(b, b))
-        if denom == 0.0:
-            return None  # try_divide semantics
-        return _fold_dot(a, b) / denom
-
-    def _is_nan(x: float) -> bool:
-        return x != x
-
-    inv = 1.0 - float(lam)
+    lam, inv = float(lam), 1.0 - float(lam)
     pool = [
         {"id": r["__id"], "rel": r["__rel"], "v": r["__v"], "ms": None}
         for r in base_rows
     ]
-    rows = []
-    sel_vecs: list = []
+    rows, last = [], None
     for rank in range(1, int(k) + 1):
         if not pool:
             break
-        if sel_vecs:
-            last = sel_vecs[-1]
-            for c in pool:
-                s = _cos(c["v"], last)
-                if s is None:
-                    continue
-                m = c["ms"]
-                # F.max semantics: NULLs skipped, NaN greater than all
-                if m is None or _is_nan(s) or (not _is_nan(m) and s > m):
-                    c["ms"] = s
-
-        def _score(c):
-            if c["rel"] is None:
-                return None  # NULL score, sorts last under desc
-            if not sel_vecs:
-                return float(lam) * c["rel"] - 0.0
-            ms = c["ms"] if c["ms"] is not None else 0.0
-            return float(lam) * c["rel"] - inv * ms
-
-        # orderBy(desc(score), asc(id)): NaN sorts as the LARGEST
-        # double in Spark and NULL last under desc
-        def _key(c):
-            s = _score(c)
-            if s is None:
-                return (2, 0.0, c["id"])
-            if _is_nan(s):
-                return (0, 0.0, c["id"])
-            return (1, -s, c["id"])
-
-        best = min(pool, key=_key)
+        for c in pool:
+            s = None if rank == 1 else _cos(c["v"], last)
+            m = c["ms"]
+            # F.max semantics: NULLs skipped, NaN greater than all
+            if s is not None and (
+                m is None or _is_nan(s) or (not _is_nan(m) and s > m)
+            ):
+                c["ms"] = m = s
+            c["score"] = None if c["rel"] is None else (
+                lam * c["rel"] - inv * (0.0 if m is None else m)
+            )
+        best = min(pool, key=lambda c: (_desc(c["score"]), _asc(c["id"])))
         pool.remove(best)
-        sel_vecs.append(best["v"])
-        rows.append((best["id"], best["rel"], _score(best), rank))
-    spark = shortlist.sparkSession
-    # id field keeps the shortlist's own id type (string doc ids work);
-    # the rel column keeps the caller's rel_col name
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+        last = best["v"]
+        rows.append((best["id"], best["rel"], best["score"], rank))
+    # the id keeps the shortlist's own type (string doc ids work); the
+    # rel column keeps the caller's rel_col name
+    id_type = shortlist.schema[id_col].dataType.simpleString()
+    schema = (
+        f"`{id_col}` {id_type}, `{rel_col}` double, mmr_score double, "
+        f"rank long"
     )
-
-    schema = StructType(
-        [
-            StructField(id_col, shortlist.schema[id_col].dataType),
-            StructField(rel_col, DoubleType()),
-            StructField("mmr_score", DoubleType()),
-            StructField("rank", LongType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return literal_frame(shortlist.sparkSession, rows, schema)
 
 
 def _ndcg_discounts_nano(k: int) -> list[int]:

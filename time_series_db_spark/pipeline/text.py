@@ -435,25 +435,22 @@ MAX_BROADCAST_VOCAB = 2048
 #: bpe_token_counts' word-type table).  Unlike ``MAX_BROADCAST_VOCAB``
 #: there is no knob that bounds these — at web scale the distinct-token
 #: space (typos, IDs, URLs) is billions of rows, so the hint is decided
-#: by a bounded existence probe (``limit(N+1).count()``, memoized via
-#: ``probe_memo``) instead of assumed from Zipf.  1M rows of
-#: (token, count) ≈ tens of MB serialized — the practical ceiling for
-#: shipping a table to every executor.  Above it the join is left
-#: unhinted: AQE promotes it back to broadcast at runtime iff the actual
-#: bytes fit ``autoBroadcastJoinThreshold``.
+#: by a bounded count (``cache.within_bound``) instead of assumed from
+#: Zipf.  1M rows of (token, count) ≈ tens of MB serialized — the
+#: practical ceiling for shipping a table to every executor.  Above it
+#: the join is left unhinted: AQE promotes it back to broadcast at
+#: runtime iff the actual bytes fit ``autoBroadcastJoinThreshold``.
 MAX_BROADCAST_TOKEN_ROWS = 1_000_000
 
 
 def _broadcast_if_bounded(df: DataFrame, kind: str):
-    """Broadcast-hint ``df`` only when a bounded probe proves its row
-    count ≤ ``MAX_BROADCAST_TOKEN_ROWS``; otherwise return it unhinted
-    (shuffle join, or AQE-promoted broadcast if runtime stats fit)."""
-    from time_series_db_spark.cache import probe_memo
+    """Broadcast-hint ``df`` only when its row count is at most
+    ``MAX_BROADCAST_TOKEN_ROWS``; otherwise return it unhinted (shuffle
+    join, or AQE-promoted broadcast if runtime stats fit)."""
+    from time_series_db_spark.cache import within_bound
 
-    n = probe_memo(
-        df, kind, lambda: df.limit(MAX_BROADCAST_TOKEN_ROWS + 1).count()
-    )
-    return F.broadcast(df) if n <= MAX_BROADCAST_TOKEN_ROWS else df
+    bounded = within_bound(df, MAX_BROADCAST_TOKEN_ROWS, kind)
+    return F.broadcast(df) if bounded else df
 
 
 def tfidf_terms(

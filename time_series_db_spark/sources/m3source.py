@@ -15,12 +15,12 @@ transform. Negated keys (``!k:v``) invert the whole key's predicate.
 
 from __future__ import annotations
 
-import re
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.model import SAMPLE_COLS, SeriesFrame, series_key_expr
 from time_series_db_spark.sources.tables import (
     DEFAULT_STEP_MS,
@@ -191,33 +191,9 @@ def synth_mock_series(
     # start + (n-1)*step inclusive ⇒ exclusive frame bound one step past),
     # so densifying stages (transformNull) fill the full value range
     max_ts = max(max_ts, min_ts + len(values) * step)
-    # literal plan (range + inline of a literal struct array), NOT
-    # createDataFrame: a createDataFrame frame is RDD-backed, so its
-    # semanticHash changes on every call — which defeated the
-    # probe-memo/persist rehydration discipline for every mock-fetch
-    # query (detect_season re-ran its ACF election per call, r14
-    # profiling: 10 jobs per re-run of m3ql_seasonal_auto).  A pure
-    # expression plan hashes identically across identical calls, and
-    # skips the per-call RDD materialization entirely.
-    # two single-call array LITERALS via SQL text (F.lit on a Python
-    # list, like a per-element F.struct build, costs one py4j round
-    # trip PER ELEMENT — seconds of driver time for the 720-point
-    # periodic mocks; one F.expr string is a single round trip)
-    def _d(v: float) -> str:
-        if v != v or v in (float("inf"), float("-inf")):
-            return f"double('{v}')"
-        return repr(v) + "D"
-
-    ts_sql = ",".join(f"{int(t)}L" for t, _ in rows)
-    v_sql = ",".join(_d(float(v)) for _, v in rows)
-    ts_arr = F.expr(f"array({ts_sql})").cast("array<bigint>")
-    v_arr = F.expr(f"array({v_sql})").cast("array<double>")
-    df = (
-        spark.range(1)
-        .select(F.posexplode(ts_arr).alias("__i", "ts"))
-        .withColumn("value", F.element_at(v_arr, F.col("__i") + 1))
-        .drop("__i")
-    )
+    # literal plan, not createDataFrame: identical mock fetches share a
+    # semanticHash, so probe memos and persists rehydrate across re-runs
+    df = literal_frame(spark, rows, "ts bigint, value double")
     keys = sorted(tags)
     label_map = F.create_map(
         *[x for k in keys for x in (F.lit(k), F.lit(tags[k]))]
@@ -229,31 +205,6 @@ def synth_mock_series(
         .select(*SAMPLE_COLS)
     )
     return SeriesFrame(df=out, step=step, min_ts=min_ts, max_ts=max_ts)
-
-
-def oracle_tag_sql(
-    match: dict[str, list[str]], inverse: dict[str, list[str]]
-) -> str:
-    """DuckDB WHERE fragment mirroring the same tag filters (differential
-    oracle side; column names are the label columns)."""
-
-    def _col(k: str) -> str:
-        return f'"{k}"' if k == "user" else k
-
-    def _one(col: str, v: str) -> str:
-        if not _has_wildcard(v):
-            return f"{col} = '{v}'"
-        pat = re.escape(v).replace(r"\*", ".*").replace(r"\?", ".")
-        return f"regexp_full_match({col}, '{pat}')"
-
-    parts = []
-    for key, values in match.items():
-        ors = " OR ".join(_one(_col(key), v) for v in values)
-        parts.append(f"({ors})")
-    for key, values in inverse.items():
-        ors = " OR ".join(_one(_col(key), v) for v in values)
-        parts.append(f"NOT ({ors})")
-    return " AND ".join(parts) if parts else "TRUE"
 
 
 class MetricsSource:
