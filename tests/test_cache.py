@@ -1,5 +1,6 @@
-"""Query-scoped cache registry: release-on-boundary without losing
-same-query warm reuse (round-4 leak fix + round-5 scoping)."""
+"""Query-scoped cache registry: the warm window of recently entered
+scopes, release at the boundary outside it, and release of warm entries
+whose input files changed."""
 
 from __future__ import annotations
 
@@ -24,6 +25,7 @@ def _is_cached(df) -> bool:
 
 
 def test_release_others_keeps_current_scope(spark):
+    """Scopes inside the warm window stay cached across boundaries."""
     cache.set_scope("qA")
     a = cache.persist_tracked(spark.range(10).selectExpr("id", "id * 2 AS v"))
     a.count()
@@ -33,18 +35,51 @@ def test_release_others_keeps_current_scope(spark):
     b = cache.persist_tracked(spark.range(5))
     b.count()
 
-    released = cache.release_others()
-    assert released == 1  # qA's frame dropped ...
-    assert not _is_cached(a)
-    assert _is_cached(b)  # ... qB's stays warm
+    assert cache.release_others() == 0  # qA is still in the window ...
+    assert _is_cached(a) and _is_cached(b)
 
-    # re-entering qB releases nothing — repeated runs rehydrate from cache
-    cache.set_scope("qB")
+    # ... and re-entering it releases nothing either
+    cache.set_scope("qA")
     assert cache.release_others() == 0
-    assert _is_cached(b)
+    assert _is_cached(a) and _is_cached(b)
 
-    assert cache.release_all() >= 1
-    assert not _is_cached(b)
+    assert cache.release_all() == 2
+    assert not _is_cached(a) and not _is_cached(b)
+
+
+def test_ninth_scope_releases_the_oldest(spark):
+    """Entering a scope beyond the window releases the least recently
+    ENTERED one — re-entering a scope makes it recent again."""
+    frames = {}
+    for i in range(cache.WARM_SCOPES):
+        cache.set_scope(f"q{i}")
+        frames[i] = cache.persist_tracked(spark.range(i + 1))
+        frames[i].count()
+        assert cache.release_others() == 0
+    cache.set_scope("q0")  # q1 is now the least recently entered
+    assert cache.release_others() == 0
+
+    cache.set_scope("q_new")
+    assert cache.release_others() == 1
+    assert not _is_cached(frames[1])
+    assert all(_is_cached(frames[i]) for i in frames if i != 1)
+    assert "q1" not in cache._TRACKED
+
+
+def test_anonymous_scope_always_released(spark):
+    """Persists issued outside any entry point (scope "") never outlive
+    the next boundary, even when "" is the current scope."""
+    cache.set_scope("")
+    anon = cache.persist_tracked(spark.range(3))
+    anon.count()
+    assert cache.release_others() == 1
+    assert not _is_cached(anon)
+
+    anon = cache.persist_tracked(spark.range(4))
+    cache.set_scope("named")
+    named = cache.persist_tracked(spark.range(6))
+    assert cache.release_others() == 1
+    assert not _is_cached(anon) and _is_cached(named)
 
 
 def test_same_plan_dedupes_within_scope(spark):
@@ -53,11 +88,31 @@ def test_same_plan_dedupes_within_scope(spark):
     df2 = cache.persist_tracked(spark.range(7).selectExpr("id + 1 AS x"))
     df1.count()
     assert _is_cached(df1) and _is_cached(df2)
-    # identical analyzed plans share one registry slot and one cache entry
-    cache.set_scope("other")
+    # identical analyzed plans share one registry slot and one cache
+    # entry: once qC leaves the window, ONE release drops both handles
+    for i in range(cache.WARM_SCOPES):
+        cache.set_scope(f"other{i}")
     assert cache.release_others() == 1
     assert not _is_cached(df1) and not _is_cached(df2)
     cache.release_all()
+
+
+def test_shared_plan_outlives_one_scope(spark):
+    """Two scopes persisting one plan share its CacheManager entry: the
+    first scope leaving the window must not uncache the second's."""
+    cache.set_scope("first")
+    a = cache.persist_tracked(spark.range(9).selectExpr("id * 3 AS x"))
+    a.count()
+    for i in range(cache.WARM_SCOPES - 1):
+        cache.set_scope(f"filler{i}")
+    cache.set_scope("second")
+    b = cache.persist_tracked(spark.range(9).selectExpr("id * 3 AS x"))
+    cache.set_scope("last")  # "first" leaves the window
+    assert cache.release_others() == 0
+    assert "first" not in cache._TRACKED
+    assert _is_cached(b)
+    assert cache.release_all() == 1
+    assert not _is_cached(b)
 
 
 def test_catalog_entry_scopes_by_query_name(spark, sf_dir):
@@ -75,9 +130,9 @@ def test_catalog_entry_scopes_by_query_name(spark, sf_dir):
 
 
 def test_probe_memo_scoped_and_released(spark):
-    """probe_memo: one compute per (plan, kind) within a scope; a
-    different scope's release drops the memo with its frames; an
-    unhashable input falls through to compute."""
+    """probe_memo: one compute per (plan, kind) within a scope; the memo
+    survives boundaries while its scope is in the warm window and is
+    dropped with the scope's frames once it leaves."""
     from time_series_db_spark import cache
 
     df = spark.range(5)
@@ -98,10 +153,115 @@ def test_probe_memo_scoped_and_released(spark):
     assert cache.probe_memo(spark.range(5), "n", compute) == 5
     assert len(calls) == 2
 
-    # another scope releasing others drops q1's memo
+    # another scope's boundary keeps q1's memo while q1 is warm ...
     cache.set_scope("q2")
+    cache.release_others()
+    cache.set_scope("q1")
+    assert cache.probe_memo(df, "n", compute) == 5
+    assert len(calls) == 2
+
+    # ... and drops it with q1's frames once q1 leaves the window
+    for i in range(cache.WARM_SCOPES):
+        cache.set_scope(f"q{i + 2}")
     cache.release_others()
     cache.set_scope("q1")
     assert cache.probe_memo(df, "n", compute) == 5
     assert len(calls) == 3
     cache.release_all()
+
+
+T0 = 1_704_067_200_000
+
+
+def test_external_write_releases_warm_entries(spark, tmp_path):
+    """A file copied into a MetricsSource table from outside the session
+    must reach the next query, though CacheManager and the probe memos
+    match the table's plan by its root path: the same query (its own
+    persists and memos warm) and a different query that persists the
+    same sub-plan both come back fresh."""
+    import glob
+    import shutil
+
+    from time_series_db_spark import service
+    from time_series_db_spark.sources.m3source import MetricsSource
+    from time_series_db_spark.streaming import INGEST_SCHEMA, ingest_batch
+
+    def docs(hosts, value):
+        return spark.createDataFrame(
+            [(f"name cpu host {h} dc d0", T0, value) for h in hosts], INGEST_SCHEMA
+        )
+
+    table = str(tmp_path / "metrics")
+    ingest_batch(spark, docs(["h0", "h1"], 1.0), table)
+    for h in ("h2", "h3"):
+        ingest_batch(spark, docs([h], 10.0), str(tmp_path / h))
+
+    def copy_in(h):
+        """One parquet file of another table, copied into the block
+        directory the way an outside writer would."""
+        [block] = glob.glob(str(tmp_path / h / "block=*"))
+        [f] = glob.glob(f"{block}/*.parquet")
+        dest = tmp_path / "metrics" / block.rsplit("/", 1)[1] / f"{h}.parquet"
+        shutil.copy(f, dest)
+
+    src = MetricsSource(spark, table)
+
+    def ask(q):
+        resp = service.promql_query_range(src, q, T0, T0 + 60_000, 60_000)
+        return [v for s in resp["data"]["result"] for _, v in s["values"]]
+
+    same = "sum by (dc) (cpu) + on(dc) sum by (dc) (cpu)"
+    assert ask(same) == ["4"]
+    copy_in("h2")
+    assert ask(same) == ["24"]
+    copy_in("h3")
+    # the right side is the same persisted sub-plan as `same`'s
+    assert ask("sum by (dc) (cpu) * on(dc) sum by (dc) (cpu)") == ["484"]
+
+
+def test_fixture_rewrite_reaches_next_fetch(spark, tmp_path):
+    """Reader and fetch-handle memos notice a rewritten fixture file, and
+    warm entries built on the old file are released; clear() drops every
+    memoised handle."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from time_series_db_spark.sources import tables
+    from time_series_db_spark.sources.m3source import EventsSource
+    from time_series_db_spark.sources.tables import fetch_events, load_table
+
+    from tests.conftest import SF_DIR
+
+    path = tmp_path / "events.parquet"
+    full = pq.read_table(f"{SF_DIR}/events.parquet")
+    pq.write_table(full, path)
+    d = str(tmp_path)
+    src = EventsSource(spark, d)
+
+    def counts():
+        return (
+            load_table(spark, d, "events").count(),
+            fetch_events(spark, d).df.count(),
+            src.fetch({"name": ["error"]}, {}, 0, 2**62, 3_600_000).df.count(),
+        )
+
+    cache.set_scope("fixture")
+    before = counts()
+    warm = cache.persist_tracked(fetch_events(spark, d).df)
+    warm.count()
+    assert before[0] == full.num_rows and all(before)
+
+    # rewrite in the middle of the session; the stamp is moved on
+    # explicitly so a coarse file-system clock cannot hide the write
+    st = os.stat(path)
+    pq.write_table(full.slice(0, full.num_rows // 2), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    after = counts()
+    assert after[0] == full.num_rows // 2
+    assert after[1] < before[1] and after[2] < before[2]
+    assert not _is_cached(warm)
+
+    assert any(tables._MEMOS)
+    tables.clear()
+    assert not any(tables._MEMOS)

@@ -13,15 +13,25 @@ holds series lists on the request heap, freed with the request).
 Contract: the registry is keyed by a *scope* — the query name/text, set
 by the entry point (catalog ``register`` wrapper, service facade) via
 :func:`set_scope` before building.  Stages call :func:`persist_tracked`
-instead of ``persist``; query boundaries call :func:`release_others`,
-which unpersists every *other* scope's frames but keeps the current
-scope's alive.  Re-running the same query therefore re-persists an
-identical analyzed plan and rehydrates from Spark CacheManager's
-existing entry (warm dashboards, warm bench re-runs), while cross-query
-accumulation stays bounded: at most the current and the most recent
-other scope's caches are ever live, and the next boundary drops the
-latter.  ``unpersist`` is always safe — a released frame re-executed
-later recomputes from lineage (correctness never depends on the cache).
+instead of ``persist``; query boundaries call :func:`release_others`.
+
+Warm window: a boundary releases only the scopes outside the
+:data:`WARM_SCOPES` most recently entered ones, plus the anonymous
+scope ``""``.  A dashboard refreshing its panels round-robin therefore
+finds each panel's persists still registered: re-running a query
+re-persists an identical analyzed plan, which rehydrates from Spark
+CacheManager's existing entry, and its probes hit their memos instead
+of running a job.  Cross-query accumulation stays bounded by the
+window: entering a ninth scope releases the oldest.  ``unpersist`` is
+always safe — a released frame re-executed later recomputes from
+lineage (correctness never depends on the cache).
+
+Freshness: CacheManager and the ``semanticHash`` memo keys match a
+file-source plan by its root path, not by its files, so a warm entry
+would keep answering from files that an outside writer has since
+added or rewritten.  Sources therefore report each read's listing
+through :func:`note_inputs`; when it differs from the listing a scope
+read before, that scope is released before anything reuses it.
 
 Frames are deduplicated within a scope by ``DataFrame.semanticHash`` so
 an N-times-re-run query tracks one handle per distinct plan, not N.
@@ -52,6 +62,13 @@ _TRACKED: dict[str, dict[int, DataFrame]] = {}
 #: at the same boundaries.
 _PROBES: dict[str, dict[tuple, object]] = {}
 _SCOPE: str = ""
+#: how many of the most recently entered scopes a boundary keeps warm:
+#: a six-panel dashboard plus headroom
+WARM_SCOPES = 8
+#: entered scopes, least recent first (at most WARM_SCOPES)
+_RECENT: list[str] = []
+#: scope -> {input root: listing signature it was read with}
+_INPUTS: dict[str, dict[str, object]] = {}
 
 
 def set_scope(name: str) -> None:
@@ -59,6 +76,11 @@ def set_scope(name: str) -> None:
     calls register.  Entry points pass their query name/text."""
     global _SCOPE
     _SCOPE = name or ""
+    if _SCOPE:
+        if _SCOPE in _RECENT:
+            _RECENT.remove(_SCOPE)
+        _RECENT.append(_SCOPE)
+        del _RECENT[:-WARM_SCOPES]
 
 
 def current_scope() -> str:
@@ -113,10 +135,29 @@ def within_bound(df: DataFrame, bound: int, kind: str) -> bool:
     return n <= bound
 
 
+def note_inputs(root: str, signature) -> None:
+    """Record that the current scope reads ``root`` as listed by
+    ``signature`` (any comparable value: a file list hash, an mtime).
+    Every scope that read ``root`` under a different listing is released
+    first — its frames and probe memos would match the new plan and
+    answer from the old files."""
+    for scope, seen in list(_INPUTS.items()):
+        if seen.get(root, signature) != signature:
+            _release_scope(scope, False)
+    _INPUTS.setdefault(_SCOPE, {})[root] = signature
+
+
 def _release_scope(scope: str, blocking: bool) -> int:
     n = 0
     _PROBES.pop(scope, None)
-    for df in _TRACKED.pop(scope, {}).values():
+    _INPUTS.pop(scope, None)
+    frames = _TRACKED.pop(scope, {})
+    # CacheManager holds ONE entry per plan: a plan another live scope
+    # also persisted stays cached until the last of them is released
+    shared = {key for other in _TRACKED.values() for key in other}
+    for key, df in frames.items():
+        if key in shared:
+            continue
         try:
             df.unpersist(blocking)
             n += 1
@@ -126,13 +167,12 @@ def _release_scope(scope: str, blocking: bool) -> int:
 
 
 def release_others(blocking: bool = False) -> int:
-    """Unpersist every scope's frames EXCEPT the current scope's; returns
-    the release count.  The query boundary call: keeps the active query
-    warm for identical re-runs, drops everything else.  Never raises —
-    a frame whose session already stopped is skipped."""
+    """Unpersist every scope's frames outside the warm window (the
+    :data:`WARM_SCOPES` most recently entered scopes) and the anonymous
+    scope's; returns the release count.  The query boundary call.  Never
+    raises — a frame whose session already stopped is skipped."""
     n = 0
-    scopes = set(_TRACKED) | set(_PROBES)
-    for scope in [s for s in scopes if s != _SCOPE]:
+    for scope in (set(_TRACKED) | set(_PROBES) | set(_INPUTS)) - set(_RECENT):
         n += _release_scope(scope, blocking)
     return n
 
@@ -141,6 +181,6 @@ def release_all(blocking: bool = False) -> int:
     """Unpersist every tracked frame in every scope (session teardown /
     tests); returns the release count."""
     n = 0
-    for scope in set(_TRACKED) | set(_PROBES):
+    for scope in set(_TRACKED) | set(_PROBES) | set(_INPUTS):
         n += _release_scope(scope, blocking)
     return n

@@ -106,13 +106,14 @@ ORACLES: dict[str, str] = {}
 
 def register(name: str, oracle: str | None = None):
     """Catalog registration. Each entry point scopes the cache registry
-    to its own name and releases the PREVIOUS query's tracked caches
+    to its own name and, before building, releases the tracked caches
     (binary-probe / rank / fallback / minhash persists — see
-    time_series_db_spark.cache) before building: the prior result has
-    been materialized by the caller by the time the next query is
-    requested, so at most one other query's caches are ever live in a
-    long-running driver session — while re-running the SAME query keeps
-    its persists warm (identical plans rehydrate from CacheManager)."""
+    time_series_db_spark.cache) of the queries outside the cache's warm
+    window: the prior results have been materialized by the caller by
+    the time the next query is requested, so a long-running driver
+    session holds at most ``cache.WARM_SCOPES`` queries' caches — while
+    re-running a recent query keeps its persists warm (identical plans
+    rehydrate from CacheManager)."""
 
     def deco(fn: QueryFn):
         import functools

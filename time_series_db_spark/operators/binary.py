@@ -114,7 +114,8 @@ def _binary_join(
     ``series_key`` column leaves the scan for the probe.  The persist is
     registered with :mod:`time_series_db_spark.cache` — the join that
     consumes it runs after this function returns, so release happens at
-    the next query boundary, not here.
+    a later query boundary (once the query leaves the warm window), not
+    here.
     """
     from time_series_db_spark.cache import persist_tracked
     from time_series_db_spark.operators.normalize import aligned, normalize_frames
@@ -319,7 +320,7 @@ def fallback_series(left: SeriesFrame, right: SeriesFrame) -> SeriesFrame:
     metadata-scale driver check, not a data collect.  The left side is
     persisted first so whatever the probe computes is reused (not
     recomputed) when the surviving frame is consumed downstream; the
-    cache is released at the next query boundary (cache.release_all).
+    cache is released by a later query boundary (cache.release_others).
     """
     from time_series_db_spark import cache as _cache
 

@@ -60,7 +60,7 @@ def _ranked_stats(stats, key):
     — and the ranged table is persisted so both the local-rank branch and
     the count branch read one consistent partitioning (spark_partition_id
     must not be recomputed under different boundaries); the cache is
-    released at the next query boundary (cache.release_all).
+    released by a later query boundary (cache.release_others).
 
     Returns ``(series_key, __order, __rorder)`` — forward and reverse
     1-based ranks; the reverse rank gives ``tail`` a count-free slice.
@@ -185,7 +185,7 @@ def top_k(
     join-back — without a persist Spark executes the upstream pipeline
     (scan + fetch dedup shuffle) twice; ``persist_tracked`` pins one
     materialization for the query's cache scope (spill-safe
-    MEMORY_AND_DISK, released at the next query boundary), the same
+    MEMORY_AND_DISK, released by a later query boundary), the same
     single-materialization contract the binary matching chain uses."""
     if fn not in _SORT_FNS:
         raise ValueError(f"unknown sort fn: {fn}")

@@ -13,24 +13,28 @@ Values are stringified doubles (Prometheus wire convention; NaN/±Inf
 serialize as "NaN"/"+Inf"/"-Inf"). Samples are ordered by timestamp
 within each series.
 
-Spark-first shaping: the per-series sample arrays are assembled
-*distributed* — one ``groupBy(series_key)`` with ``sort_array(
-collect_list(struct(ts, value)))`` (a single shuffle; each series'
-samples are bounded by the query grid, so no group outgrows an executor)
-— and only the final shaped rows cross to the driver. ``collect()``
-happens here because this IS the boundary where results leave the engine,
-the same place the reference streams its JSON response.
+The response leaves the engine as ONE flat Arrow collect of
+``(series_key, alias, ts, value)`` rows (plus the sort/topK rank
+columns) and is shaped on the driver: a columnar sort by
+``(series_key, alias, ts)``, contiguous runs grouped into series, and
+labels decoded from the key with ``str_to_map``'s rules.  Every sample
+crosses to the driver either way — the response holds them all — so a
+distributed ``groupBy(series_key)`` into sorted sample arrays only added
+a shuffle job and array rows that the driver then unpacked.  This is
+the boundary where results leave the engine, the same place the
+reference streams its JSON response from the coordinator's
+``List<TimeSeries>``.
 """
 
 from __future__ import annotations
 
+import bisect
 import math
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from time_series_db_spark.model import SeriesFrame
+from time_series_db_spark.model import _KV_SEP, _PAIR_SEP, SeriesFrame
 
 
 def _fmt(v: float) -> str:
@@ -44,21 +48,55 @@ def _fmt(v: float) -> str:
 
 
 def matrix_frame(sf: SeriesFrame) -> DataFrame:
-    """One row per series: labels, alias, sorted (ts, value) sample array."""
-    from time_series_db_spark.model import labels_from_key_expr
+    """The response projection: one row per sample — series key, alias,
+    timestamp, value, and the frame's ``ordered_by`` rank columns."""
+    return sf.df.select("series_key", "alias", "ts", "value", *(sf.ordered_by or []))
 
-    aggs = [
-        F.sort_array(
-            F.collect_list(F.struct(F.col("ts"), F.col("value")))
-        ).alias("samples"),
-    ]
-    if sf.ordered_by:
-        aggs += [F.first(c).alias(c) for c in sf.ordered_by]
-    return (
-        sf.df.groupBy("series_key", "alias")
-        .agg(*aggs)
-        .withColumn("labels", labels_from_key_expr(F.col("series_key")))
+
+def _labels(key: str | None) -> dict[str, str | None]:
+    """:func:`~time_series_db_spark.model.labels_from_key_expr` on the
+    driver: ``""`` is the empty map, each pair splits at its FIRST
+    ``:``, and a pair without one maps its key to ``None``."""
+    if not key:
+        return {}
+    out = {}
+    for pair in key.split(_PAIR_SEP):
+        k, sep, v = pair.partition(_KV_SEP)
+        out[k] = v if sep else None
+    return out
+
+
+def _series(sf: SeriesFrame) -> list[tuple]:
+    """``(series_key, alias, ranks, timestamps, values)`` per series from
+    one Arrow collect of :func:`matrix_frame`, samples ascending by
+    timestamp (equal timestamps by value, NaN last, as ``sort_array``
+    ordered them), series in ``series_key`` then alias order."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    tbl = matrix_frame(sf).toArrow()
+    if not tbl.num_rows:
+        return []
+    order = pc.sort_indices(
+        tbl,
+        sort_keys=[(c, "ascending") for c in ("series_key", "alias", "ts", "value")],
+        null_placement="at_end",
     )
+    tbl = tbl.take(order)
+    keys, aliases = (
+        tbl.column(c).to_numpy(zero_copy_only=False) for c in ("series_key", "alias")
+    )
+    ts, vals, *ranks = (
+        tbl.column(c).to_numpy(zero_copy_only=False).tolist()
+        for c in ("ts", "value", *(sf.ordered_by or []))
+    )
+    # a series starts where the key or the alias changes (None == None)
+    starts = np.flatnonzero((keys[1:] != keys[:-1]) | (aliases[1:] != aliases[:-1]))
+    bounds = [0, *(starts + 1).tolist(), len(ts)]
+    return [
+        (keys[lo], aliases[lo], tuple(r[lo] for r in ranks), ts[lo:hi], vals[lo:hi])
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
 
 
 def to_matrix(
@@ -75,11 +113,9 @@ def to_matrix(
     ``include_alias`` gates the alias field (the m3ql surface passes true,
     the promql surface false — RestM3QLAction.java:266 /
     RestPromQLAction.java:234)."""
-    rows = matrix_frame(sf).collect()
+    series = _series(sf)
     if sf.ordered_by:
-        rows.sort(key=lambda r: tuple(r[c] for c in sf.ordered_by))
-    else:
-        rows.sort(key=lambda r: r["series_key"])
+        series.sort(key=lambda x: x[2])
     meta = (
         {"step": sf.step, "start": sf.min_ts, "end": sf.max_ts}
         if include_metadata
@@ -87,16 +123,12 @@ def to_matrix(
     )
     result = [
         {
-            "metric": dict(r["labels"]),
-            **(
-                {"alias": r["alias"]}
-                if include_alias and r["alias"] is not None
-                else {}
-            ),
-            "values": [[int(s["ts"]), _fmt(s["value"])] for s in r["samples"]],
+            "metric": _labels(key),
+            **({"alias": alias} if include_alias and alias is not None else {}),
+            "values": [[int(t), _fmt(v)] for t, v in zip(ts, vals)],
             **meta,
         }
-        for r in rows
+        for key, alias, _, ts, vals in series
     ]
     return {"status": "success", "data": {"resultType": "matrix", "result": result}}
 
@@ -117,20 +149,11 @@ def to_vector(sf: SeriesFrame, time_ms: int) -> dict[str, Any]:
     lookback window), reported at the evaluation instant. Series with no
     emission at or before the instant drop out, like stale series.
     """
-    rows = (
-        matrix_frame(sf)
-        .select("series_key", "labels", "samples")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["series_key"])
     result = []
-    for r in rows:
-        at = [s for s in r["samples"] if s["ts"] <= time_ms]
-        if at:  # sort_array ordered ascending — last is the most recent
+    for key, _, _, ts, vals in _series(sf):
+        at = bisect.bisect_right(ts, time_ms)
+        if at:  # ascending — the last one at or before is the most recent
             result.append(
-                {
-                    "metric": dict(r["labels"]),
-                    "value": [int(time_ms), _fmt(at[-1]["value"])],
-                }
+                {"metric": _labels(key), "value": [int(time_ms), _fmt(vals[at - 1])]}
             )
     return {"status": "success", "data": {"resultType": "vector", "result": result}}

@@ -242,8 +242,8 @@ def minhash_dedup_pairs(
     Signatures feed three consumers (band join left+right, verify joins);
     persisting them computes the shingle+hash scan once — at cluster scale
     this is the standard "materialize signatures, then self-join" shape
-    (a checkpoint/intermediate table on a real pipeline); released at the
-    next query boundary (cache.release_all).
+    (a checkpoint/intermediate table on a real pipeline); released by a
+    later query boundary (cache.release_others).
     """
     from time_series_db_spark.cache import persist_tracked
 

@@ -177,8 +177,10 @@ def m3ql_query_range(
     if profiler is not None:
         resp["profile"] = {"stages": profiler.stages}
         profiler.release()
-    # response collected — drop OTHER queries' stage-probe persists; this
-    # query's stay warm so a dashboard re-issuing it rehydrates from cache
+    # response collected — release the persists and probe memos of the
+    # queries outside the cache's warm window of recent scopes; the ones
+    # inside stay, so a dashboard re-issuing a panel rehydrates from
+    # cache and skips its probe jobs
     cache.release_others()
     return resp
 
@@ -222,8 +224,10 @@ def promql_query_range(
     if profiler is not None:
         resp["profile"] = {"stages": profiler.stages}
         profiler.release()
-    # response collected — drop OTHER queries' stage-probe persists; this
-    # query's stay warm so a dashboard re-issuing it rehydrates from cache
+    # response collected — release the persists and probe memos of the
+    # queries outside the cache's warm window of recent scopes; the ones
+    # inside stay, so a dashboard re-issuing a panel rehydrates from
+    # cache and skips its probe jobs
     cache.release_others()
     return resp
 

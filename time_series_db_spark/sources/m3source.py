@@ -15,18 +15,20 @@ transform. Negated keys (``!k:v``) invert the whole key's predicate.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from time_series_db_spark import cache
 from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.model import SAMPLE_COLS, SeriesFrame, series_key_expr
 from time_series_db_spark.sources.tables import (
     DEFAULT_STEP_MS,
     EVENTS_MAX_TS,
     EVENTS_MIN_TS,
+    events_path,
     fetch_events,
+    handle_memo,
+    memo_by_file,
 )
 
 
@@ -78,15 +80,16 @@ def regex_filter_predicate(
     return ~pred if inverted else pred
 
 
-#: session → {filter signature: SeriesFrame} — cross-QUERY fetch-frame
-#: memo for the language path.  The m3/prom builders already CSE
-#: identical fetches WITHIN one query; different catalog entries
-#: re-issue the same (filters, range, step) fetch and paid the full
-#: plan re-construction (~0.3 s of py4j per fetch).  A SeriesFrame is
-#: an immutable lazy plan — memoizing the handle changes no results and
+#: session → {filter signature: (stamp, SeriesFrame)} — cross-QUERY
+#: fetch-frame memo for the language path.  The m3/prom builders already
+#: CSE identical fetches WITHIN one query; different catalog entries
+#: re-issue the same (filters, range, step) fetch and paid the full plan
+#: re-construction (~0.3 s of py4j per fetch).  A SeriesFrame is an
+#: immutable lazy plan — memoizing the handle changes no results and
 #: caches no data; it also keeps the plan's semanticHash stable, which
-#: is what the probe/persist rehydration discipline keys on.
-_SRC_FETCH_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+#: is what the probe/persist rehydration discipline keys on.  A rewritten
+#: events file gets a new handle (``memo_by_file``).
+_SRC_FETCH_MEMO = handle_memo()
 
 
 class EventsSource:
@@ -123,10 +126,13 @@ class EventsSource:
             max_ts,
             step,
         )
-        per = _SRC_FETCH_MEMO.setdefault(self.spark, {})
-        hit = per.get(key)
-        if hit is not None:
-            return hit
+        return memo_by_file(
+            _SRC_FETCH_MEMO, self.spark, key, events_path(self.sf_dir),
+            lambda: self._fetch(match, inverse, min_ts, max_ts, step,
+                                match_re, inverse_re),
+        )
+
+    def _fetch(self, match, inverse, min_ts, max_ts, step, match_re, inverse_re):
         where = None
         for k, values in match.items():
             p = tag_filter_predicate(F.col(k), values)
@@ -140,7 +146,7 @@ class EventsSource:
         for k, values in (inverse_re or {}).items():
             p = regex_filter_predicate(F.col(k), values, inverted=True)
             where = p if where is None else (where & p)
-        sf = fetch_events(
+        return fetch_events(
             self.spark,
             self.sf_dir,
             step=step,
@@ -148,8 +154,6 @@ class EventsSource:
             max_ts=min(max_ts, EVENTS_MAX_TS),
             where=where,
         )
-        per[key] = sf
-        return sf
 
     def mock_fetch(
         self,
@@ -286,6 +290,12 @@ class MetricsSource:
             df = read_metrics(
                 self.spark, self.table, min_ts=min_ts, max_ts=max_ts
             )
+        # the read has listed the table's files: a listing that differs
+        # from an earlier read's releases the warm frames built on it
+        cache.note_inputs(
+            chosen["path"] if chosen is not None else self.table,
+            hash(frozenset(df.inputFiles())),
+        )
         lbl = F.col("labels")
         where = None
         for key, values in match.items():

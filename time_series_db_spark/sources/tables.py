@@ -21,9 +21,13 @@ mirroring decode-order LWW in TimeSeriesUnfoldAggregator.java:305-320.
 
 from __future__ import annotations
 
+import os
+from weakref import WeakKeyDictionary
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from time_series_db_spark import cache
 from time_series_db_spark.model import SAMPLE_COLS, SeriesFrame, series_key_expr
 
 #: 1h grid over the events table's 2024-01 span
@@ -52,32 +56,76 @@ _TS_COLS = {
 }
 
 
-#: session → {parquet path: (raw reader DataFrame, dtypes)}.  The
-#: testdata tables are immutable fixtures read by every catalog entry;
-#: rebuilding the reader per query re-lists the directory, re-infers the
-#: schema (a driver-side parquet-footer job) and pays ~100 py4j round
-#: trips — pure per-query fixed cost at any scale (guide §1.2: fewer
-#: jobs per query).  The memo holds only the READER HANDLE (an immutable
-#: lazy plan) — never data or results: every action still computes from
-#: the parquet files.  Keyed weakly by session so a stopped session's
-#: handles are dropped with it.
-from weakref import WeakKeyDictionary
+#: every session-lived handle memo of the sources package (see
+#: :func:`memo_by_file`); :func:`clear` empties them all
+_MEMOS: "list[WeakKeyDictionary]" = []
 
-_RAW_READERS: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+
+def handle_memo() -> "WeakKeyDictionary":
+    """A new session → {key: (file stamp, handle)} memo, weakly keyed by
+    session so a stopped session's handles are dropped with it."""
+    memo = WeakKeyDictionary()
+    _MEMOS.append(memo)
+    return memo
+
+
+def clear() -> None:
+    """Drop every memoised reader and fetch handle, in every session."""
+    for memo in _MEMOS:
+        memo.clear()
+
+
+def file_stamp(path: str) -> int | None:
+    """Modification time (ns) of a local path — a dataset directory's
+    moves when a file is added to, removed from or renamed into it — or
+    ``None`` when the path is not on the local file system."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
+
+
+def memo_by_file(memo, spark: SparkSession, key, path: str, build):
+    """``build()``'s handle memoised under ``key``, rebuilt when ``path``
+    was modified since: the handle's file listing was made when it was
+    built, so a rewritten fixture needs a new one.  Also notes the read
+    with the query cache (:func:`~time_series_db_spark.cache.note_inputs`),
+    which releases warm frames and probe memos built on the old files."""
+    stamp = file_stamp(path)
+    cache.note_inputs(path, stamp)
+    per = memo.setdefault(spark, {})
+    hit = per.get(key)
+    if hit is None or hit[0] != stamp:
+        hit = per[key] = (stamp, build())
+    return hit[1]
+
+
+#: session → {parquet path: (stamp, (raw reader DataFrame, dtypes))}.
+#: Every catalog entry reads the testdata tables; rebuilding the reader
+#: per query re-lists the directory, re-infers the schema (a driver-side
+#: parquet-footer job) and pays ~100 py4j round trips — pure per-query
+#: fixed cost at any scale (guide §1.2: fewer jobs per query).  The memo
+#: holds only the READER HANDLE (an immutable lazy plan) — never data or
+#: results: every action still computes from the parquet files, and a
+#: rewritten file gets a new reader (:func:`memo_by_file`).
+_RAW_READERS = handle_memo()
 
 
 def _read_testdata(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict[str, str]]:
-    per = _RAW_READERS.setdefault(spark, {})
-    hit = per.get(path)
-    if hit is None:
+    def build():
         # TIMESTAMP(NANOS) columns are only readable as int64 under the
         # legacy flag; set before the first read of each path
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
-        hit = per[path] = (df, dict(df.dtypes))
-    return hit
+        return df, dict(df.dtypes)
+
+    return memo_by_file(_RAW_READERS, spark, path, path, build)
+
+
+def events_path(sf_dir: str) -> str:
+    return f"{sf_dir}/events.parquet"
 
 
 def _date_ns(date: str) -> int:
@@ -176,7 +224,7 @@ def _raw_samples(
     read as BIGINT nanos (legacy flag) and timestamp[us] read as
     TIMESTAMP_NTZ; both floor to epoch millis like DuckDB's epoch_ms.
     """
-    ev, ev_dtypes = _read_testdata(spark, f"{sf_dir}/events.parquet")
+    ev, ev_dtypes = _read_testdata(spark, events_path(sf_dir))
     ts_type = ev_dtypes.get("ts", "bigint")
     if ts_type == "bigint":
         rng = (F.col("ts") >= F.lit(min_ts * 1_000_000)) & (
@@ -247,15 +295,15 @@ def fetch_series_identities(
     )
 
 
-#: session → {(sf_dir, step, bounds): SeriesFrame} — the plain (no label
-#: predicate) fetch frame per argument set.  A SeriesFrame is a frozen
-#: wrapper over an immutable lazy plan, so the handle is reusable across
-#: queries exactly like the reader handle above; rebuilding it per query
-#: cost ~100 py4j round trips of pure plan re-construction.  Entries
-#: with a ``where`` Column bypass the memo (Columns are not hashable
-#: keys); the language path memoizes those by filter signature in
-#: sources/m3source.py.
-_FETCH_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+#: session → {(sf_dir, step, bounds): (stamp, SeriesFrame)} — the plain
+#: (no label predicate) fetch frame per argument set.  A SeriesFrame is a
+#: frozen wrapper over an immutable lazy plan, so the handle is reusable
+#: across queries exactly like the reader handle above; rebuilding it
+#: per query cost ~100 py4j round trips of pure plan re-construction.
+#: Entries with a ``where`` Column bypass the memo (Columns are not
+#: hashable keys); the language path memoizes those by filter signature
+#: in sources/m3source.py.
+_FETCH_MEMO = handle_memo()
 
 
 def fetch_events(
@@ -272,14 +320,11 @@ def fetch_events(
     deterministic LWW (max event_id per bucket) → SeriesFrame.
     """
     if where is None:
-        per = _FETCH_MEMO.setdefault(spark, {})
-        key = (sf_dir, step, min_ts, max_ts)
-        hit = per.get(key)
-        if hit is None:
-            hit = per[key] = _fetch_events_build(
-                spark, sf_dir, step, min_ts, max_ts, None
-            )
-        return hit
+        return memo_by_file(
+            _FETCH_MEMO, spark, (sf_dir, step, min_ts, max_ts),
+            events_path(sf_dir),
+            lambda: _fetch_events_build(spark, sf_dir, step, min_ts, max_ts, None),
+        )
     return _fetch_events_build(spark, sf_dir, step, min_ts, max_ts, where)
 
 
