@@ -265,3 +265,111 @@ def test_fixture_rewrite_reaches_next_fetch(spark, tmp_path):
     assert any(tables._MEMOS)
     tables.clear()
     assert not any(tables._MEMOS)
+
+
+def test_scope_is_per_thread(spark):
+    """A thread entering scope b leaves another thread's scope a as it
+    was, and the first thread's persists still register under a."""
+    import threading
+
+    a_in, b_in = threading.Event(), threading.Event()
+    seen = {}
+
+    def run_a():
+        cache.set_scope("a")
+        a_in.set()
+        b_in.wait(30)
+        seen["a"] = cache.current_scope()
+        cache.persist_tracked(spark.range(11))
+
+    def run_b():
+        a_in.wait(30)
+        cache.set_scope("b")
+        seen["b"] = cache.current_scope()
+        b_in.set()
+
+    threads = [threading.Thread(target=f) for f in (run_a, run_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {"a": "a", "b": "b"}
+    assert set(cache._TRACKED) == {"a"}
+
+
+def test_scope_registry_under_thread_stress():
+    """More threads than cores enter scopes, note inputs and cross
+    boundaries with a tiny switch interval: every thread keeps its own
+    scope throughout and no registry update raises."""
+    import sys
+    import threading
+
+    n_threads, rounds = 8, 300
+    errors = []
+
+    def worker(i):
+        try:
+            for r in range(rounds):
+                cache.set_scope(f"s{i}")
+                cache.note_inputs(f"root{i}", 0)
+                cache.release_others()
+                assert cache.current_scope() == f"s{i}", (i, r)
+        except Exception as e:  # reported below with the thread's index
+            errors.append(f"{i}: {type(e).__name__}: {e}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+
+def test_two_threads_query_one_session(spark, sf_dir):
+    """Two callers run different queries (each with a binary stage, so
+    each persists and probes under its own scope) on one session at the
+    same time; each answer equals its single-threaded one."""
+    import threading
+
+    from time_series_db_spark import service
+    from time_series_db_spark.sources.m3source import EventsSource
+    from time_series_db_spark.sources.tables import EVENTS_MAX_TS, EVENTS_MIN_TS
+
+    src = EventsSource(spark, sf_dir)
+    queries = [
+        (service.m3ql_query_range,
+         "fetch name:error | divideWhen ge 50 (fetch name:error | sum region) region"),
+        (service.promql_query_range,
+         "sum by (region) (error) / on(region) sum by (region) (click)"),
+    ]
+
+    def ask(i):
+        facade, query = queries[i]
+        return facade(src, query, EVENTS_MIN_TS, EVENTS_MAX_TS, 3_600_000)
+
+    want = [ask(0), ask(1)]
+    assert all(w["data"]["result"] for w in want)
+    got, errors = {0: [], 1: []}, []
+
+    def worker(i):
+        try:
+            for _ in range(3):
+                got[i].append(ask(i))
+        except Exception as e:  # reported below with the query
+            errors.append(f"{queries[i][1]}: {type(e).__name__}: {e}")
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {0: [want[0]] * 3, 1: [want[1]] * 3}

@@ -36,6 +36,15 @@ read before, that scope is released before anything reuses it.
 Frames are deduplicated within a scope by ``DataFrame.semanticHash`` so
 an N-times-re-run query tracks one handle per distinct plan, not N.
 
+Concurrency: the current scope is a :class:`contextvars.ContextVar`, so
+two callers sharing one session (service threads) each register under
+their own query; a thread starts in the anonymous scope.  The registry
+and the warm window are shared by every caller and guarded by one lock.
+A boundary releases only scopes outside the window, so one caller's
+boundary drops another's in-flight persists only when more than
+:data:`WARM_SCOPES` other queries were entered meanwhile — and even
+then the frames recompute from lineage.
+
 Bounded collect: a coordinator kernel (BPE trainer, union-find, MMR)
 runs in Python only over a provably small frame.  :func:`bounded_rows`
 is that one action — ``limit(bound + 1).collect()``, or ``None`` when
@@ -47,6 +56,9 @@ same rows.
 """
 
 from __future__ import annotations
+
+import contextvars
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -61,7 +73,7 @@ _TRACKED: dict[str, dict[int, DataFrame]] = {}
 #: result has exactly the cache's staleness semantics: released together
 #: at the same boundaries.
 _PROBES: dict[str, dict[tuple, object]] = {}
-_SCOPE: str = ""
+_SCOPE: contextvars.ContextVar[str] = contextvars.ContextVar("scope", default="")
 #: how many of the most recently entered scopes a boundary keeps warm:
 #: a six-panel dashboard plus headroom
 WARM_SCOPES = 8
@@ -69,22 +81,26 @@ WARM_SCOPES = 8
 _RECENT: list[str] = []
 #: scope -> {input root: listing signature it was read with}
 _INPUTS: dict[str, dict[str, object]] = {}
+#: guards the registries above against concurrent callers
+_LOCK = threading.RLock()
 
 
 def set_scope(name: str) -> None:
-    """Name the scope under which subsequent :func:`persist_tracked`
-    calls register.  Entry points pass their query name/text."""
-    global _SCOPE
-    _SCOPE = name or ""
-    if _SCOPE:
-        if _SCOPE in _RECENT:
-            _RECENT.remove(_SCOPE)
-        _RECENT.append(_SCOPE)
-        del _RECENT[:-WARM_SCOPES]
+    """Name the scope under which the calling context's subsequent
+    :func:`persist_tracked` calls register.  Entry points pass their
+    query name/text."""
+    scope = name or ""
+    _SCOPE.set(scope)
+    if scope:
+        with _LOCK:
+            if scope in _RECENT:
+                _RECENT.remove(scope)
+            _RECENT.append(scope)
+            del _RECENT[:-WARM_SCOPES]
 
 
 def current_scope() -> str:
-    return _SCOPE
+    return _SCOPE.get()
 
 
 def persist_tracked(
@@ -96,7 +112,8 @@ def persist_tracked(
         key = cached.semanticHash()
     except Exception:  # pragma: no cover - analysis failure → unique key
         key = id(cached)
-    _TRACKED.setdefault(_SCOPE, {})[key] = cached
+    with _LOCK:
+        _TRACKED.setdefault(_SCOPE.get(), {})[key] = cached
     return cached
 
 
@@ -113,7 +130,8 @@ def probe_memo(dfs, kind: str, compute):
         key = (tuple(df.semanticHash() for df in dfs), kind)
     except Exception:  # pragma: no cover - analysis failure → no memo
         return compute()
-    memo = _PROBES.setdefault(_SCOPE, {})
+    with _LOCK:
+        memo = _PROBES.setdefault(_SCOPE.get(), {})
     if key not in memo:
         memo[key] = compute()
     return memo[key]
@@ -141,13 +159,15 @@ def note_inputs(root: str, signature) -> None:
     Every scope that read ``root`` under a different listing is released
     first — its frames and probe memos would match the new plan and
     answer from the old files."""
-    for scope, seen in list(_INPUTS.items()):
-        if seen.get(root, signature) != signature:
-            _release_scope(scope, False)
-    _INPUTS.setdefault(_SCOPE, {})[root] = signature
+    with _LOCK:
+        for scope, seen in list(_INPUTS.items()):
+            if seen.get(root, signature) != signature:
+                _release_scope(scope, False)
+        _INPUTS.setdefault(_SCOPE.get(), {})[root] = signature
 
 
 def _release_scope(scope: str, blocking: bool) -> int:
+    """Drop ``scope``'s entries; the caller holds :data:`_LOCK`."""
     n = 0
     _PROBES.pop(scope, None)
     _INPUTS.pop(scope, None)
@@ -172,8 +192,9 @@ def release_others(blocking: bool = False) -> int:
     scope's; returns the release count.  The query boundary call.  Never
     raises — a frame whose session already stopped is skipped."""
     n = 0
-    for scope in (set(_TRACKED) | set(_PROBES) | set(_INPUTS)) - set(_RECENT):
-        n += _release_scope(scope, blocking)
+    with _LOCK:
+        for scope in (set(_TRACKED) | set(_PROBES) | set(_INPUTS)) - set(_RECENT):
+            n += _release_scope(scope, blocking)
     return n
 
 
@@ -181,6 +202,7 @@ def release_all(blocking: bool = False) -> int:
     """Unpersist every tracked frame in every scope (session teardown /
     tests); returns the release count."""
     n = 0
-    for scope in set(_TRACKED) | set(_PROBES) | set(_INPUTS):
-        n += _release_scope(scope, blocking)
+    with _LOCK:
+        for scope in set(_TRACKED) | set(_PROBES) | set(_INPUTS):
+            n += _release_scope(scope, blocking)
     return n

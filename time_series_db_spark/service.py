@@ -49,9 +49,10 @@ def _enforce_limits(sf, max_series: int | None, max_points: int | None) -> None:
     """Metadata-sized probe run before the matrix collect: ONE
     distributed aggregation returning a single (n_series, n_points) row
     — the result crossing to the driver is two longs no matter how wide
-    the match is, so the guard itself can never OOM.  The stage-probe
-    persist cache keeps the subsequent collect from recomputing the
-    query from scratch."""
+    the match is, so the guard itself can never OOM.  Nothing persists
+    ``sf.df``, so with a cap set the query executes twice: once for
+    this count and once for the response collect (only intermediates
+    that stages persisted themselves are shared)."""
     if max_series is None and max_points is None:
         return
     from pyspark.sql import functions as F

@@ -11,6 +11,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the driver heap never defaults above this
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def driver_memory(override: str | None, physical_bytes: int) -> str:
+    """``spark.driver.memory``: ``override`` (``$SPARK_DRIVER_MEM``) when
+    set, else half of the host's physical memory, at most 16g.  A fixed
+    16g heap on a 15 GB host lets the JVM grow past what the host has."""
+    if override:
+        return override
+    return f"{min(physical_bytes // 2 // 2**20, MAX_DRIVER_MEM_MB)}m"
+
 
 def get_spark(app_name: str = "time_series_db_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -45,7 +57,13 @@ def get_spark(app_name: str = "time_series_db_spark") -> SparkSession:
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory(
+                os.environ.get("SPARK_DRIVER_MEM"),
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 
 from time_series_db_spark import cache
 from time_series_db_spark.literals import literal_frame
-from time_series_db_spark.model import SAMPLE_COLS, SeriesFrame, series_key_expr
+from time_series_db_spark.model import (
+    SAMPLE_COLS,
+    SeriesFrame,
+    labels_from_key_expr,
+    series_key_expr,
+)
 from time_series_db_spark.sources.tables import (
     DEFAULT_STEP_MS,
     EVENTS_MAX_TS,
@@ -215,17 +220,28 @@ class MetricsSource:
     """M3Source over an INGESTED metrics table (streaming/ingest.py) —
     closes the write-read loop: bulk docs → Structured Streaming ingest →
     M3QL/PromQL query, the reference's own lifecycle (TSDBEngine.index →
-    RestM3QLAction query). Accepts a parquet path (``read_metrics``) or,
-    with ``bucketed=True``, a catalog table written by
+    RestM3QLAction query). Accepts a parquet path or, with
+    ``bucketed=True``, a catalog table written by
     ``ingest_batch_bucketed`` — then per-series stages downstream plan
     zero series_key exchanges.
+
+    A fetch is one pass, as the reference's shard-level
+    ``time_series_unfold`` is (TimeSeriesUnfoldAggregator.java:270-320):
+    one pruned scan (pinned schema, so building it runs no Spark job)
+    and one aggregation, ``max_by(value, ts)`` per (series, grid
+    bucket). That single aggregation is both the ANY_WINS (series, ts)
+    merge of ``read_metrics`` and the last-write-wins grid alignment:
+    either way a bucket takes a value at its newest timestamp, chosen
+    arbitrarily among duplicates there (the stream's own duplicates are
+    exact copies).
 
     Unlike EventsSource (fixed label columns), labels here are the open
     map decoded from ``series_key``, so tag predicates evaluate against
     ``labels[key]`` — they cannot reach parquet as pushed filters, but
-    block-partition pruning and ts row-group pruning still bound the
-    scan (the reference's Lucene label index is the part Spark replaces
-    with the bucket/partition layout, not with per-label statistics).
+    they sit below the aggregation, and block-partition pruning and ts
+    row-group pruning still bound the scan (the reference's Lucene label
+    index is the part Spark replaces with the bucket/partition layout,
+    not with per-label statistics).
 
     ``rollups`` opts into M3-style aggregated-namespace selection: a
     list of ``{"path": str, "resolution_ms": int, "agg": str}`` dicts
@@ -265,8 +281,8 @@ class MetricsSource:
         inverse_re: dict[str, list[str]] | None = None,
     ) -> SeriesFrame:
         from time_series_db_spark.streaming.ingest import (
-            read_metrics,
-            read_metrics_bucketed,
+            prune_blocks,
+            scan_metrics,
         )
 
         # namespace selection: coarsest rollup whose resolution fits the
@@ -276,27 +292,23 @@ class MetricsSource:
             if int(r["resolution_ms"]) <= step:
                 chosen = r
         if chosen is not None:
-            from time_series_db_spark.streaming.downsample import read_rollup
+            from time_series_db_spark.streaming.downsample import scan_rollup
 
-            df = read_rollup(
+            df = scan_rollup(
                 self.spark, chosen["path"], chosen.get("agg", "last"),
                 min_ts=min_ts, max_ts=max_ts,
             )
         elif self.bucketed:
-            df = read_metrics_bucketed(
-                self.spark, self.table, min_ts=min_ts, max_ts=max_ts
-            )
+            df = prune_blocks(self.spark.table(self.table), min_ts, max_ts)
         else:
-            df = read_metrics(
-                self.spark, self.table, min_ts=min_ts, max_ts=max_ts
-            )
+            df = scan_metrics(self.spark, self.table, min_ts, max_ts)
         # the read has listed the table's files: a listing that differs
         # from an earlier read's releases the warm frames built on it
         cache.note_inputs(
             chosen["path"] if chosen is not None else self.table,
             hash(frozenset(df.inputFiles())),
         )
-        lbl = F.col("labels")
+        lbl = labels_from_key_expr(F.col("series_key"))
         where = None
         for key, values in match.items():
             p = tag_filter_predicate(lbl[key], values)
@@ -317,17 +329,16 @@ class MetricsSource:
             where = p if where is None else (where & p)
         if where is not None:
             df = df.filter(where)
-        # grid alignment with LWW by raw timestamp (the events adapter
-        # breaks ties by ingest order; stored samples carry no ingest id,
-        # so the latest raw timestamp in the bucket wins)
+        # one aggregation: ANY_WINS dedup and LWW grid alignment at once
+        # (stored samples carry no ingest id, so the latest raw timestamp
+        # in the bucket wins; the events adapter breaks ties by ingest
+        # order instead)
         grid = (F.col("ts") - (F.col("ts") % F.lit(int(step)))).alias("__grid")
         aligned = (
-            df.withColumn("__grid", grid)
+            df.select("series_key", "ts", "value", grid)
             .groupBy("series_key", "__grid")
             .agg(F.expr("max_by(value, ts)").alias("value"))
         )
-        from time_series_db_spark.model import labels_from_key_expr
-
         out = aligned.select(
             "series_key",
             labels_from_key_expr(F.col("series_key")).alias("labels"),

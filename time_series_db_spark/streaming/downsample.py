@@ -39,6 +39,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from time_series_db_spark.model import labels_from_key_expr
@@ -46,18 +47,28 @@ from time_series_db_spark.streaming.ingest import (
     DEFAULT_BLOCK_MS,
     DEFAULT_OOO_CUTOFF,
     INGEST_SCHEMA,
+    dedup_samples,
     parse_ingest,
+    prune_blocks,
     write_blocks,
 )
 
 #: rollup value columns, computed in one aggregation pass
 ROLLUP_AGGS = ("sum", "count", "min", "max", "last")
 
-#: physical schema of a rollup table
-ROLLUP_COLS = [
-    "series_key", "labels", "ts",
-    *[f"value_{a}" for a in ROLLUP_AGGS], "block",
-]
+#: physical schema of a rollup table, pinned on read like the metrics
+#: table's (only :func:`start_downsample` and :func:`cascade_rollup`
+#: write it)
+ROLLUP_SCHEMA = T.StructType(
+    [
+        T.StructField("series_key", T.StringType()),
+        T.StructField("labels", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("ts", T.LongType()),
+        *[T.StructField(f"value_{a}", T.DoubleType()) for a in ROLLUP_AGGS],
+        T.StructField("block", T.LongType()),
+    ]
+)
+ROLLUP_COLS = ROLLUP_SCHEMA.fieldNames()
 
 
 def start_downsample(
@@ -131,6 +142,25 @@ def start_downsample(
     return writer.start()
 
 
+def scan_rollup(
+    spark: SparkSession,
+    rollup_path: str,
+    agg: str = "last",
+    min_ts: int | None = None,
+    max_ts: int | None = None,
+    block_ms: int = DEFAULT_BLOCK_MS,
+) -> DataFrame:
+    """The pruned raw rows of a rollup table as (series_key, ts, value),
+    ``value`` being the requested aggregation — duplicates NOT merged."""
+    if agg not in ROLLUP_AGGS:
+        raise ValueError(f"agg must be one of {ROLLUP_AGGS}, got {agg!r}")
+    df = prune_blocks(
+        spark.read.schema(ROLLUP_SCHEMA).parquet(rollup_path),
+        min_ts, max_ts, block_ms,
+    )
+    return df.select("series_key", "ts", F.col(f"value_{agg}").alias("value"))
+
+
 def read_rollup(
     spark: SparkSession,
     rollup_path: str,
@@ -142,30 +172,18 @@ def read_rollup(
     """Scan a rollup table as a metrics-shaped frame (series_key, labels,
     ts, value) with the requested aggregation as the value column — the
     namespace-selection read: a long-range query reads this instead of
-    the raw table, with the same block/row-group pruning.
+    the raw table, with the same block/row-group pruning and the same
+    pinned-schema read (:data:`ROLLUP_SCHEMA`, no inference job).
 
     Duplicate (series, window) rows can exist in tables assembled
     without the streaming sink's _spark_metadata log (batch backfills,
     copies); a replayed window carries IDENTICAL totals, so they merge
-    ANY_WINS (first row) — an agg-specific combine (sum of sums) would
-    double-count the replay.
+    ANY_WINS (any one row) — an agg-specific combine (sum of sums) would
+    double-count the replay. ``MetricsSource`` reads :func:`scan_rollup`
+    instead and folds this merge into its grid alignment.
     """
-    if agg not in ROLLUP_AGGS:
-        raise ValueError(f"agg must be one of {ROLLUP_AGGS}, got {agg!r}")
-    df = spark.read.parquet(rollup_path)
-    if min_ts is not None:
-        df = df.filter(
-            (F.col("block") >= F.lit(min_ts - min_ts % block_ms))
-            & (F.col("ts") >= F.lit(min_ts))
-        )
-    if max_ts is not None:
-        df = df.filter((F.col("block") < F.lit(max_ts)) & (F.col("ts") < F.lit(max_ts)))
-    col = f"value_{agg}"
-    return (
-        df.groupBy("series_key", "ts")
-        .agg(F.first(col).alias("value"))
-        .withColumn("labels", labels_from_key_expr(F.col("series_key")))
-        .select("series_key", "labels", "ts", "value")
+    return dedup_samples(
+        scan_rollup(spark, rollup_path, agg, min_ts, max_ts, block_ms)
     )
 
 
@@ -223,16 +241,10 @@ def cascade_rollup(
                 f"{bound - bound % resolution_ms} or "
                 f"{bound - bound % resolution_ms + resolution_ms})"
             )
-    fine = spark.read.parquet(fine_path)
-    if min_ts is not None:
-        fine = fine.filter(
-            (F.col("block") >= F.lit(min_ts - min_ts % block_ms))
-            & (F.col("ts") >= F.lit(min_ts))
-        )
-    if max_ts is not None:
-        fine = fine.filter(
-            (F.col("block") < F.lit(max_ts)) & (F.col("ts") < F.lit(max_ts))
-        )
+    fine = prune_blocks(
+        spark.read.schema(ROLLUP_SCHEMA).parquet(fine_path),
+        min_ts, max_ts, block_ms,
+    )
     # pre-merge checkpoint duplicates per fine window. A replayed
     # window re-emits IDENTICAL totals (append mode only emits closed
     # windows computed from full state), so the correct dedup is

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from time_series_db_spark.model import series_key_expr
+from time_series_db_spark.model import labels_from_key_expr, series_key_expr
 
 #: 2h time blocks — the reference's first compaction tier / closed-index
 #: range (core/compaction/SizeTieredCompaction.java:1-20 javadoc).
@@ -66,8 +66,21 @@ INGEST_SCHEMA = T.StructType(
     ]
 )
 
-#: physical schema of the metrics table (block is the partition column)
-METRICS_COLS = ["series_key", "labels", "ts", "value", "block"]
+#: physical schema of the metrics table (block is the partition column).
+#: Only this package writes the table (the streaming sink,
+#: :func:`write_blocks`, the wire ingests, the rule sinks), so readers
+#: pin the schema instead of inferring it: inference reads a parquet
+#: footer in a Spark job on every read.
+METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("series_key", T.StringType()),
+        T.StructField("labels", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("ts", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("block", T.LongType()),
+    ]
+)
+METRICS_COLS = METRICS_SCHEMA.fieldNames()
 
 
 def parse_ingest(raw: DataFrame, block_ms: int = DEFAULT_BLOCK_MS) -> DataFrame:
@@ -242,21 +255,8 @@ def read_metrics_bucketed(
     :func:`read_metrics`, but the dedup aggregation (and any downstream
     per-series window) inherits the bucket clustering instead of paying
     an exchange."""
-    df = spark.table(table_name)
-    if min_ts is not None:
-        df = df.filter(
-            (F.col("block") >= F.lit(min_ts - min_ts % block_ms))
-            & (F.col("ts") >= F.lit(min_ts))
-        )
-    if max_ts is not None:
-        df = df.filter((F.col("block") < F.lit(max_ts)) & (F.col("ts") < F.lit(max_ts)))
-    from time_series_db_spark.model import labels_from_key_expr
-
-    return (
-        df.groupBy("series_key", "ts")
-        .agg(F.first("value").alias("value"))
-        .withColumn("labels", labels_from_key_expr(F.col("series_key")))
-        .select("series_key", "labels", "ts", "value")
+    return dedup_samples(
+        prune_blocks(spark.table(table_name), min_ts, max_ts, block_ms)
     )
 
 
@@ -309,24 +309,17 @@ def ingestion_lag(query: StreamingQuery) -> dict | None:
     return None
 
 
-def read_metrics(
-    spark: SparkSession,
-    table_path: str,
+def prune_blocks(
+    df: DataFrame,
     min_ts: int | None = None,
     max_ts: int | None = None,
     block_ms: int = DEFAULT_BLOCK_MS,
 ) -> DataFrame:
-    """Scan the ingested metrics table with time-block partition pruning.
-
-    The ``block`` predicate prunes whole partition directories (the
-    reference's ``TimeRangePruningQuery`` segment skip, SURVEY.md §4.1
-    row 3); the ``ts`` predicate then prunes row groups via parquet
-    min/max stats. Duplicate (series, ts) rows across separate ingest
-    batches are resolved by taking one arbitrary sample at read — the
-    reference's SampleMerger ANY_WINS policy (query/utils/SampleMerger.java,
-    applied via DedupIterator at TimeSeriesUnfoldAggregator.java:270-277).
-    """
-    df = spark.read.parquet(table_path)
+    """Restrict a block-partitioned store frame (metrics or rollup) to
+    ``[min_ts, max_ts)``. The ``block`` predicate prunes whole partition
+    directories (the reference's ``TimeRangePruningQuery`` segment skip,
+    SURVEY.md §4.1 row 3); the ``ts`` predicate then prunes row groups
+    via parquet min/max stats."""
     if min_ts is not None:
         df = df.filter(
             (F.col("block") >= F.lit(min_ts - min_ts % block_ms))
@@ -334,13 +327,61 @@ def read_metrics(
         )
     if max_ts is not None:
         df = df.filter((F.col("block") < F.lit(max_ts)) & (F.col("ts") < F.lit(max_ts)))
-    from time_series_db_spark.model import labels_from_key_expr
+    return df
 
+
+def scan_metrics(
+    spark: SparkSession,
+    table_path: str,
+    min_ts: int | None = None,
+    max_ts: int | None = None,
+    block_ms: int = DEFAULT_BLOCK_MS,
+) -> DataFrame:
+    """The pruned raw rows of a metrics table, read with
+    :data:`METRICS_SCHEMA` — duplicates NOT merged. A directory with no
+    committed file yet reads as empty; a missing path raises
+    ``PATH_NOT_FOUND``."""
+    return prune_blocks(
+        spark.read.schema(METRICS_SCHEMA).parquet(table_path),
+        min_ts, max_ts, block_ms,
+    )
+
+
+def dedup_samples(df: DataFrame) -> DataFrame:
+    """One sample per (series, ts) of a scan's ``value`` column, taken
+    arbitrarily among its duplicates — the reference's SampleMerger
+    ANY_WINS policy (query/utils/SampleMerger.java, applied via
+    DedupIterator at TimeSeriesUnfoldAggregator.java:270-277). Labels
+    are decoded from ``series_key``, so a filter on them stays below
+    the aggregation."""
     return (
         df.groupBy("series_key", "ts")
         .agg(F.first("value").alias("value"))
         .withColumn("labels", labels_from_key_expr(F.col("series_key")))
         .select("series_key", "labels", "ts", "value")
+    )
+
+
+def read_metrics(
+    spark: SparkSession,
+    table_path: str,
+    min_ts: int | None = None,
+    max_ts: int | None = None,
+    block_ms: int = DEFAULT_BLOCK_MS,
+) -> DataFrame:
+    """Scan the ingested metrics table with time-block partition pruning
+    (:func:`prune_blocks`), one sample per (series, ts).
+
+    Duplicate (series, ts) rows — a replayed epoch, two batch appends of
+    the same document — resolve ANY_WINS (:func:`dedup_samples`): one of
+    them, arbitrarily. The stream's own duplicates are exact copies, so
+    which one wins only matters for two appends that disagree. The
+    schema is pinned (:data:`METRICS_SCHEMA`), so building the frame
+    runs no Spark job. ``MetricsSource`` reads :func:`scan_metrics`
+    instead and folds the dedup into its grid alignment.
+    """
+    return dedup_samples(
+        scan_metrics(spark, table_path, min_ts, max_ts, block_ms)
     )
 
 
