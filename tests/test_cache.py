@@ -170,6 +170,26 @@ def test_probe_memo_scoped_and_released(spark):
     cache.release_all()
 
 
+def test_memo_key_names_the_listing_its_build_noted(spark):
+    """Two callers of one scope name, interleaved in one thread: A reads
+    listing L1, B notes L2 (which releases the scope), then A stores its
+    answer.  B must compute its own answer, not find A's."""
+    import contextvars
+
+    df = spark.range(3)
+    a, b = contextvars.copy_context(), contextvars.copy_context()
+    a.run(cache.set_scope, "panel")
+    a.run(cache.note_inputs, "root", "L1")
+    b.run(cache.set_scope, "panel")
+    b.run(cache.note_inputs, "root", "L2")
+    assert a.run(cache.probe_memo, df, "answer", lambda: "from L1") == "from L1"
+    assert b.run(cache.probe_memo, df, "answer", lambda: "from L2") == "from L2"
+    assert b.run(cache.probe_memo, df, "answer", lambda: "again") == "from L2"
+    # entering the scope again starts a new record of noted listings
+    b.run(cache.set_scope, "panel")
+    assert b.run(cache.probe_memo, df, "answer", lambda: "unnoted") == "unnoted"
+
+
 T0 = 1_704_067_200_000
 
 

@@ -303,6 +303,33 @@ def test_ingest_read_families_job_budget(spark, tmp_path, monkeypatch):
         spark.sql("DROP TABLE IF EXISTS metrics_budget_bucketed")
 
 
+def test_ingest_read_families_warm_equals_cold(spark, tmp_path):
+    """Each store read family answered from its warm scope (no Spark
+    job) equals the answer computed again after every scope was
+    released."""
+    from time_series_db_spark import cache
+
+    docs = spark.createDataFrame(_docs(_clean_value), INGEST_SCHEMA)
+    table = str(tmp_path / "metrics")
+    ingest_batch(spark, docs, table)
+    ingest_batch(spark, docs, table)
+    src = MetricsSource(spark, table)
+    sc = spark.sparkContext
+    facades = {"m3ql": service.m3ql_query_range, "promql": service.promql_query_range}
+    for i, (lang, query, _) in enumerate(_READ_FAMILIES):
+        cache.release_all()
+        first = facades[lang](src, query, START, END, 60_000)
+        sc.setJobGroup(f"store-warm:{i}", "")
+        warm = facades[lang](src, query, START, END, 60_000)
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert sc.statusTracker().getJobIdsForGroup(f"store-warm:{i}") == [], query
+        cache.release_all()
+        cold = facades[lang](src, query, START, END, 60_000)
+        assert warm == cold == first and _flat(cold), query
+    cache.release_all()
+
+
 def test_empty_store_answers_empty_matrix(spark, tmp_path):
     """A table whose ingest stream has started but committed no file
     yet answers an empty matrix (the schema is pinned, so there is

@@ -33,6 +33,37 @@ added or rewritten.  Sources therefore report each read's listing
 through :func:`note_inputs`; when it differs from the listing a scope
 read before, that scope is released before anything reuses it.
 
+Each memo key also names the listings its own build noted
+(:func:`note_inputs` records them per caller, and :func:`set_scope`
+clears the record).  Two callers of one scope name can otherwise race:
+a caller that read the old listing could store its answer after a
+caller with the new listing released the scope, and the new caller
+would find that stale entry under the same plan hash.
+
+Response memo: a service query's response — the Arrow table of its
+:func:`~time_series_db_spark.output.matrix_frame` collect, sorted for
+shaping — is one more probe memo, kind ``"response"``, keyed like any
+other by the frame's ``semanticHash`` and the listings its build noted.
+A dashboard re-issuing a panel inside the warm window still builds the
+plan, and every source still notes its listing, but the response runs
+no Spark job.  It is released with its scope: outside the warm window,
+or when a listing it read changes.  An answer is held only:
+
+- in a named scope.  A service facade returns its caller to the
+  anonymous scope, so a later direct ``to_matrix`` holds nothing; a
+  catalog entry keeps its caller in its scope but forgets its noted
+  listings (:func:`forget_noted`).
+- when its build noted at least one input listing, none of them
+  unknown (:func:`inputs_noted`).  Freshness rests on those notes, so
+  a source that does not report its reads gets no memoised answer.
+- for a deterministic analyzed plan.
+- for a table under :data:`~time_series_db_spark.output
+  .RESPONSE_MEMO_BYTES` Arrow bytes and not cut at a ``max_points``
+  row bound; any other table comes back as :class:`Transient`.
+
+The warm window therefore holds at most ``WARM_SCOPES`` times that cap
+per distinct response.
+
 Frames are deduplicated within a scope by ``DataFrame.semanticHash`` so
 an N-times-re-run query tracks one handle per distinct plan, not N.
 
@@ -59,6 +90,7 @@ from __future__ import annotations
 
 import contextvars
 import threading
+from typing import NamedTuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -74,6 +106,11 @@ _TRACKED: dict[str, dict[int, DataFrame]] = {}
 #: at the same boundaries.
 _PROBES: dict[str, dict[tuple, object]] = {}
 _SCOPE: contextvars.ContextVar[str] = contextvars.ContextVar("scope", default="")
+#: the (input root, listing signature) pairs the calling context's build
+#: noted since it entered its scope — part of every memo key it makes
+_NOTED: contextvars.ContextVar[frozenset] = contextvars.ContextVar(
+    "noted", default=frozenset()
+)
 #: how many of the most recently entered scopes a boundary keeps warm:
 #: a six-panel dashboard plus headroom
 WARM_SCOPES = 8
@@ -91,6 +128,7 @@ def set_scope(name: str) -> None:
     query name/text."""
     scope = name or ""
     _SCOPE.set(scope)
+    _NOTED.set(frozenset())
     if scope:
         with _LOCK:
             if scope in _RECENT:
@@ -117,23 +155,37 @@ def persist_tracked(
     return cached
 
 
+class Transient(NamedTuple):
+    """A :func:`probe_memo` result handed back to its caller but not
+    memoised (a response table over the byte cap or cut at a row
+    bound)."""
+
+    value: object
+
+
 def probe_memo(dfs, kind: str, compute):
     """Memoize a coordinator-probe result (a small driver value computed
     by an action over the given frame(s)) under the current scope, keyed
-    by their semantic hashes: an identical query re-run skips the probe
-    job entirely — the warm-dashboard path pays zero blocking actions
-    for its binary stages. Falls through to ``compute()`` (uncached)
-    when a plan can't be hashed."""
+    by their semantic hashes and the listings this context's build
+    noted: an identical query re-run skips the probe job entirely — the
+    warm-dashboard path pays zero blocking actions for its binary
+    stages.  A ``compute()`` returning :class:`Transient` hands its value
+    back unmemoised.  Falls through to ``compute()`` (uncached) when a
+    plan can't be hashed."""
     if isinstance(dfs, DataFrame):
         dfs = (dfs,)
     try:
-        key = (tuple(df.semanticHash() for df in dfs), kind)
+        key = (tuple(df.semanticHash() for df in dfs), kind, _NOTED.get())
     except Exception:  # pragma: no cover - analysis failure → no memo
-        return compute()
-    with _LOCK:
-        memo = _PROBES.setdefault(_SCOPE.get(), {})
+        key, memo = None, {}
+    else:
+        with _LOCK:
+            memo = _PROBES.setdefault(_SCOPE.get(), {})
     if key not in memo:
-        memo[key] = compute()
+        out = compute()
+        if isinstance(out, Transient):
+            return out.value
+        memo[key] = out
     return memo[key]
 
 
@@ -158,12 +210,29 @@ def note_inputs(root: str, signature) -> None:
     ``signature`` (any comparable value: a file list hash, an mtime).
     Every scope that read ``root`` under a different listing is released
     first — its frames and probe memos would match the new plan and
-    answer from the old files."""
+    answer from the old files.  The calling context also keeps the pair
+    for the memo keys it makes from here on (:func:`probe_memo`)."""
+    _NOTED.set(_NOTED.get() | {(root, signature)})
     with _LOCK:
         for scope, seen in list(_INPUTS.items()):
             if seen.get(root, signature) != signature:
                 _release_scope(scope, False)
         _INPUTS.setdefault(_SCOPE.get(), {})[root] = signature
+
+
+def inputs_noted() -> bool:
+    """Whether the calling context's build noted at least one input
+    listing since it entered its scope, none of them unknown (``None``,
+    a non-local path): the condition for memoising a whole response."""
+    noted = _NOTED.get()
+    return bool(noted) and all(sig is not None for _, sig in noted)
+
+
+def forget_noted() -> None:
+    """Clear the calling context's noted listings, staying in its scope:
+    what it builds next is not memoised as a response until a source
+    notes a read again."""
+    _NOTED.set(frozenset())
 
 
 def _release_scope(scope: str, blocking: bool) -> int:

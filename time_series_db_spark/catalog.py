@@ -136,7 +136,13 @@ def register(name: str, oracle: str | None = None):
 
             cache.set_scope(name)
             cache.release_others()
-            return fn(spark, sf_dir)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                # the caller stays in the entry's scope, but a response
+                # it collects later is not memoised on this build's
+                # listings
+                cache.forget_noted()
 
         QUERIES[name] = wrapped
         if oracle is not None:

@@ -39,7 +39,13 @@ from time_series_db_spark.operators import (
 
 class M3Source(Protocol):
     """Data source contract for ``fetch`` — implemented by EventsSource
-    (driver testdata) and the metrics-table source."""
+    (driver testdata) and the metrics-table source.
+
+    A ``fetch`` over stored files reports the listing it read through
+    :func:`~time_series_db_spark.cache.note_inputs`.  The query cache
+    relies on it for freshness: a changed listing releases the warm
+    scopes built on the old files, and a query whose build noted no
+    listing gets no memoised response."""
 
     def fetch(
         self,

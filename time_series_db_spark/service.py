@@ -30,47 +30,39 @@ import time
 from typing import Any
 
 from time_series_db_spark import cache
-from time_series_db_spark.output import to_matrix
+from time_series_db_spark.output import QueryLimitError, to_matrix
 
 DEFAULT_STEP_MS = 10_000  # RestM3QLAction default step (params javadoc :1-70)
 DEFAULT_LOOKBACK_MS = 5 * 60_000  # start default: now-5m
 
 
-class QueryLimitError(Exception):
-    """A query matched more series / sample points than its configured
-    cap — the Spark analog of the reference's reduce-phase circuit
-    breaker (query/breaker/ReduceCircuitBreakerConsumer.java, settings
-    TSDBPlugin.java:136-293): fail fast with a bounded error instead of
-    letting a runaway ``fetch name:*`` OOM the driver-side matrix
-    collect."""
-
-
-def _enforce_limits(sf, max_series: int | None, max_points: int | None) -> None:
-    """Metadata-sized probe run before the matrix collect: ONE
-    distributed aggregation returning a single (n_series, n_points) row
-    — the result crossing to the driver is two longs no matter how wide
-    the match is, so the guard itself can never OOM.  Nothing persists
-    ``sf.df``, so with a cap set the query executes twice: once for
-    this count and once for the response collect (only intermediates
-    that stages persisted themselves are shared)."""
-    if max_series is None and max_points is None:
-        return
-    from pyspark.sql import functions as F
-
-    row = sf.df.agg(
-        F.countDistinct("series_key").alias("__ns"),
-        F.count(F.lit(1)).alias("__np"),
-    ).collect()[0]
-    if max_series is not None and row["__ns"] > max_series:
-        raise QueryLimitError(
-            f"query matched {row['__ns']} series, exceeding "
-            f"max_series={max_series}"
-        )
-    if max_points is not None and row["__np"] > max_points:
-        raise QueryLimitError(
-            f"query produced {row['__np']} sample points, exceeding "
-            f"max_points={max_points}"
-        )
+def _answer(scope: str, build, shape, explain: bool = False, profiler=None):
+    """Build a query's frame (``build()``) under its cache scope and
+    return its response (``shape(sf)``), or its formatted physical plan
+    when ``explain``.  Inside the scope the response table is memoised:
+    a re-issued query still builds its plan (its sources note their
+    listings), then shapes the held table without a Spark job.  On the
+    way out the caller is back in the anonymous scope, so a direct
+    ``to_matrix`` afterwards memoises nothing under this query's name."""
+    cache.set_scope(scope)
+    try:
+        sf = build()
+        if explain:
+            return sf.df._sc._jvm.PythonSQLUtils.explainString(
+                sf.df._jdf.queryExecution(), "formatted"
+            )
+        resp = shape(sf)
+        if profiler is not None:
+            resp["profile"] = {"stages": profiler.stages}
+            profiler.release()
+        # response shaped — release the persists, probe memos and response
+        # tables of the queries outside the cache's warm window of recent
+        # scopes; the ones inside stay, so a dashboard re-issuing a panel
+        # answers from its scope and skips its probe and collect jobs
+        cache.release_others()
+        return resp
+    finally:
+        cache.set_scope("")
 
 
 def _resolve_times(
@@ -125,11 +117,12 @@ def m3ql_query_range(
     matrix helpers, pass False for wire parity).
 
     ``max_series`` / ``max_points`` are the reference's reduce-phase
-    circuit-breaker semantics (ReduceCircuitBreakerConsumer.java): when
-    set, a metadata-sized count probe runs before the matrix collect
-    and a query matching more series / producing more sample points
-    than the cap raises :class:`QueryLimitError` instead of OOMing the
-    driver.
+    circuit-breaker semantics (ReduceCircuitBreakerConsumer.java): a
+    query matching more series / producing more sample points than the
+    cap raises :class:`QueryLimitError` instead of OOMing the driver.
+    With ``max_points`` the response collect reads at most
+    ``max_points + 1`` rows; ``max_series`` alone runs a memoised series
+    count first (:func:`~time_series_db_spark.output.to_matrix`).
 
     ``resolved_partitions`` mirrors the REST body param
     (RestM3QLAction + ResolvedPartitions): a list of window dicts
@@ -167,23 +160,15 @@ def m3ql_query_range(
         from time_series_db_spark.lang.m3.builder import StageProfiler
 
         profiler = StageProfiler()
-    cache.set_scope(f"m3ql:{query}")
-    sf = execute(query, source, s, e, step, profiler=profiler)
-    if explain:
-        return sf.df._sc._jvm.PythonSQLUtils.explainString(
-            sf.df._jdf.queryExecution(), "formatted"
-        )
-    _enforce_limits(sf, max_series, max_points)
-    resp = to_matrix(sf, include_metadata=include_metadata, include_alias=True)
-    if profiler is not None:
-        resp["profile"] = {"stages": profiler.stages}
-        profiler.release()
-    # response collected — release the persists and probe memos of the
-    # queries outside the cache's warm window of recent scopes; the ones
-    # inside stay, so a dashboard re-issuing a panel rehydrates from
-    # cache and skips its probe jobs
-    cache.release_others()
-    return resp
+    return _answer(
+        f"m3ql:{query}",
+        lambda: execute(query, source, s, e, step, profiler=profiler),
+        lambda sf: to_matrix(
+            sf, include_metadata=include_metadata, include_alias=True,
+            max_series=max_series, max_points=max_points,
+        ),
+        explain, profiler,
+    )
 
 
 def promql_query_range(
@@ -214,23 +199,15 @@ def promql_query_range(
         from time_series_db_spark.lang.m3.builder import StageProfiler
 
         profiler = StageProfiler()
-    cache.set_scope(f"promql:{query}")
-    sf = execute(query, source, s, e, step, profiler=profiler)
-    if explain:
-        return sf.df._sc._jvm.PythonSQLUtils.explainString(
-            sf.df._jdf.queryExecution(), "formatted"
-        )
-    _enforce_limits(sf, max_series, max_points)
-    resp = to_matrix(sf, include_metadata=include_metadata, include_alias=False)
-    if profiler is not None:
-        resp["profile"] = {"stages": profiler.stages}
-        profiler.release()
-    # response collected — release the persists and probe memos of the
-    # queries outside the cache's warm window of recent scopes; the ones
-    # inside stay, so a dashboard re-issuing a panel rehydrates from
-    # cache and skips its probe jobs
-    cache.release_others()
-    return resp
+    return _answer(
+        f"promql:{query}",
+        lambda: execute(query, source, s, e, step, profiler=profiler),
+        lambda sf: to_matrix(
+            sf, include_metadata=include_metadata, include_alias=False,
+            max_series=max_series, max_points=max_points,
+        ),
+        explain, profiler,
+    )
 
 
 def promql_query(
@@ -269,12 +246,11 @@ def promql_query(
     t = time_ms if time_ms is not None else (
         now_ms if now_ms is not None else int(time.time() * 1000)
     )
-    cache.set_scope(f"promql-instant:{query}")
-    sf = execute(query, source, t - lookback_ms, t + step, step)
-    _enforce_limits(sf, max_series, max_points)
-    resp = to_vector(sf, t)
-    cache.release_others()
-    return resp
+    return _answer(
+        f"promql-instant:{query}",
+        lambda: execute(query, source, t - lookback_ms, t + step, step),
+        lambda sf: to_vector(sf, t, max_series=max_series, max_points=max_points),
+    )
 
 
 #: Java String header overhead the reference's memory estimate charges
