@@ -69,91 +69,6 @@ def test_parse_plan_fails_typed_or_succeeds(query):
         pass  # typed rejection is a correct outcome for garbage args
 
 
-# ---------------------------------------------------------------------------
-# differential execution fuzz: plain store vs bucketed store
-# ---------------------------------------------------------------------------
-
-_H = 3_600_000
-_T0 = 1_704_067_200_000  # 2024-01-01T00:00:00Z
-
-
-@pytest.fixture(scope="module")
-def dual_sources(spark, tmp_path_factory):
-    """The SAME synthetic metrics ingested twice: a plain parquet store
-    (per-series stages pay a series_key exchange) and a bucketed
-    catalog table (the exchange-ELISION fast path).  The grammar fuzz
-    runs every generated pipeline on both and demands identical rows —
-    so the fast path gets the same adversarial coverage as the slow
-    path, not just the handful of hand-written loop tests."""
-    from time_series_db_spark.sources.m3source import MetricsSource
-    from time_series_db_spark.streaming import (
-        INGEST_SCHEMA,
-        ingest_batch,
-        ingest_batch_bucketed,
-    )
-
-    tmp = tmp_path_factory.mktemp("fuzz_store")
-    docs = spark.createDataFrame(
-        [
-            (
-                f"name {'error' if i % 2 else 'click'} host h{i % 3} "
-                f"region {'east' if i % 2 else 'west'}",
-                _T0 + j * _H,
-                float((i + 1) * j) if (i + j) % 5 else float("nan"),
-            )
-            for i in range(5)
-            for j in range(8)
-        ],
-        INGEST_SCHEMA,
-    )
-    plain_path = str(tmp / "plain")
-    ingest_batch(spark, docs, plain_path)
-    spark.sql("DROP TABLE IF EXISTS metrics_fuzz_dual")
-    ingest_batch_bucketed(
-        spark, docs, "metrics_fuzz_dual", path=str(tmp / "bucketed"),
-        n_buckets=4,
-    )
-    yield (
-        MetricsSource(spark, plain_path),
-        MetricsSource(spark, "metrics_fuzz_dual", bucketed=True),
-    )
-    spark.sql("DROP TABLE IF EXISTS metrics_fuzz_dual")
-
-
-def _rows(sf):
-    return sorted(
-        repr((tuple(sorted(r.labels.items())) if r.labels else (), r.ts,
-              r.value))
-        for r in sf.df.collect()
-    )
-
-
-@settings(
-    max_examples=25,
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(query=_pipelines())
-def test_bucketed_store_matches_plain_store(query, dual_sources):
-    """Every fuzz pipeline that plans must EXECUTE identically on the
-    plain store and the bucketed store — the bucket layout is a
-    physical optimization (one elided exchange), never a semantic
-    one."""
-    from time_series_db_spark.lang.m3.builder import execute
-    from time_series_db_spark.lang.m3.parser import M3ParseError
-    from time_series_db_spark.lang.m3.plan import M3PlanError
-
-    plain, bucketed = dual_sources
-    end = _T0 + 8 * _H
-    try:
-        a = _rows(execute(query, plain, _T0, end, _H))
-    except (M3ParseError, M3PlanError):
-        return  # typed rejection: same grammar, nothing to execute
-    b = _rows(execute(query, bucketed, _T0, end, _H))
-    assert a == b, f"bucketed store diverged from plain store on: {query}"
-
-
 @pytest.mark.parametrize(
     "query",
     [

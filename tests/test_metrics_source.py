@@ -23,10 +23,8 @@ from time_series_db_spark.streaming import (
     DEFAULT_BLOCK_MS,
     INGEST_SCHEMA,
     ingest_batch,
-    ingest_batch_bucketed,
     parse_ingest,
     read_metrics,
-    read_metrics_bucketed,
     read_rollup,
     start_ingest,
 )
@@ -42,7 +40,7 @@ ROLLUP_MS = 60_000
 
 class _ReferenceSource(MetricsSource):
     """The fetch as it was before the fusion: the public ANY_WINS read
-    (``read_metrics`` / ``read_metrics_bucketed`` / ``read_rollup``),
+    (``read_metrics`` / ``read_rollup``),
     the tag filter over its decoded labels, then the LWW grid
     alignment as a second aggregation."""
 
@@ -55,8 +53,6 @@ class _ReferenceSource(MetricsSource):
         if chosen is not None:
             df = read_rollup(self.spark, chosen["path"], chosen.get("agg", "last"),
                              min_ts=min_ts, max_ts=max_ts)
-        elif self.bucketed:
-            df = read_metrics_bucketed(self.spark, self.table, min_ts=min_ts, max_ts=max_ts)
         else:
             df = read_metrics(self.spark, self.table, min_ts=min_ts, max_ts=max_ts)
         lbl = F.col("labels")
@@ -134,14 +130,6 @@ def _store(spark, tmp, name, path_kind, first, second):
             ingest_batch(spark, spark.createDataFrame(docs, INGEST_SCHEMA), table)
         kw = {}
         rows = lambda: spark.read.parquet(table)  # noqa: E731
-    elif path_kind == "bucketed":
-        table = f"metrics_fused_{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        for docs in (first, second):
-            ingest_batch_bucketed(spark, spark.createDataFrame(docs, INGEST_SCHEMA),
-                                  table, path=str(tmp / name), n_buckets=4)
-        kw = {"bucketed": True}
-        rows = lambda: spark.table(table)  # noqa: E731
     else:
         table = str(tmp / f"{name}_raw_unused")
         rollup = str(tmp / name)
@@ -180,7 +168,7 @@ def _clean_registry():
     cache.release_all()
 
 
-@pytest.mark.parametrize("path_kind", ["raw", "bucketed", "rollup"])
+@pytest.mark.parametrize("path_kind", ["raw", "rollup"])
 def test_fused_fetch_equals_dedup_then_align(spark, tmp_path, path_kind):
     """Exact-duplicate appends (the stream's own kind), NaN values, a
     label value holding ``:`` and samples on both sides of a block
@@ -191,22 +179,19 @@ def test_fused_fetch_equals_dedup_then_align(spark, tmp_path, path_kind):
     # replayed rollup window carries the whole window's totals again
     again = docs if path_kind == "rollup" else docs[::3]
     fused, ref, _ = _store(spark, tmp_path, "clean", path_kind, docs, again)
-    try:
-        facades = {"m3ql": service.m3ql_query_range,
-                   "promql": service.promql_query_range}
-        for step in STEPS:
-            for lang, q in QUERIES:
-                want = _flat(facades[lang](ref, q, START, END, step))
-                got = _flat(facades[lang](fused, q, START, END, step))
-                assert want, (lang, q, step)
-                assert got.keys() == want.keys(), (lang, q, step)
-                bad = [k for k in want if not _same(got[k], want[k])]
-                assert not bad, (lang, q, step, bad[:3])
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_fused_clean")
+    facades = {"m3ql": service.m3ql_query_range,
+               "promql": service.promql_query_range}
+    for step in STEPS:
+        for lang, q in QUERIES:
+            want = _flat(facades[lang](ref, q, START, END, step))
+            got = _flat(facades[lang](fused, q, START, END, step))
+            assert want, (lang, q, step)
+            assert got.keys() == want.keys(), (lang, q, step)
+            bad = [k for k in want if not _same(got[k], want[k])]
+            assert not bad, (lang, q, step, bad[:3])
 
 
-@pytest.mark.parametrize("path_kind", ["raw", "bucketed", "rollup"])
+@pytest.mark.parametrize("path_kind", ["raw", "rollup"])
 def test_fused_fetch_unequal_duplicates_pick_a_candidate(spark, tmp_path, path_kind):
     """Two appends that disagree on a (series, ts): ANY_WINS may keep
     either, so both formulations must answer, per grid bucket, one of
@@ -215,33 +200,30 @@ def test_fused_fetch_unequal_duplicates_pick_a_candidate(spark, tmp_path, path_k
     # every fourth document re-sent with another value
     fused, ref, rows = _store(spark, tmp_path, "unequal", path_kind, docs,
                               [(s, t, v + 0.5) for s, t, v in docs[::4]])
-    try:
-        stored = [(r.series_key, r.ts, r.value) for r in rows().collect()]
-        for step in STEPS:
-            newest, cands = {}, {}
-            for key, ts, _ in stored:
-                if START <= ts < END:
-                    b = (key, ts - ts % step)
-                    newest[b] = max(newest.get(b, ts), ts)
-            for key, ts, v in stored:
+    stored = [(r.series_key, r.ts, r.value) for r in rows().collect()]
+    for step in STEPS:
+        newest, cands = {}, {}
+        for key, ts, _ in stored:
+            if START <= ts < END:
                 b = (key, ts - ts % step)
-                if newest.get(b) == ts:
-                    cands.setdefault(b, set()).add(v)
-            assert any(len(c) > 1 for c in cands.values())
-            expect = {
-                (frozenset(tuple(kv.split(":", 1)) for kv in k.split(",")), t): c
-                for (k, t), c in cands.items()
-            }
-            for src in (ref, fused):
-                for resp in (
-                    service.m3ql_query_range(src, "fetch name:*", START, END, step),
-                    service.promql_query_range(src, '{__name__=~".+"}', START, END, step),
-                ):
-                    got = _flat(resp)
-                    assert got.keys() == expect.keys()
-                    assert all(v in expect[k] for k, v in got.items())
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_fused_unequal")
+                newest[b] = max(newest.get(b, ts), ts)
+        for key, ts, v in stored:
+            b = (key, ts - ts % step)
+            if newest.get(b) == ts:
+                cands.setdefault(b, set()).add(v)
+        assert any(len(c) > 1 for c in cands.values())
+        expect = {
+            (frozenset(tuple(kv.split(":", 1)) for kv in k.split(",")), t): c
+            for (k, t), c in cands.items()
+        }
+        for src in (ref, fused):
+            for resp in (
+                service.m3ql_query_range(src, "fetch name:*", START, END, step),
+                service.promql_query_range(src, '{__name__=~".+"}', START, END, step),
+            ):
+                got = _flat(resp)
+                assert got.keys() == expect.keys()
+                assert all(v in expect[k] for k, v in got.items())
 
 
 #: Spark jobs of each ingest read family's response action (one per AQE
@@ -259,7 +241,7 @@ def test_ingest_read_families_job_budget(spark, tmp_path, monkeypatch):
     """The store's three read families through the facades: building
     the plan runs no Spark job (the schema is pinned), and the response
     collect stays within its budget; a raw-table fetch plans one
-    exchange, a bucketed one none on series_key."""
+    exchange."""
     docs = spark.createDataFrame(_docs(_clean_value), INGEST_SCHEMA)
     table = str(tmp_path / "metrics")
     ingest_batch(spark, docs, table)
@@ -291,16 +273,6 @@ def test_ingest_read_families_job_budget(spark, tmp_path, monkeypatch):
 
     raw = plan(src.fetch({"name": ["cpu"]}, {}, START, END, 60_000))
     assert raw.count("Exchange") == 1, raw
-    spark.sql("DROP TABLE IF EXISTS metrics_budget_bucketed")
-    ingest_batch_bucketed(spark, docs, "metrics_budget_bucketed",
-                          path=str(tmp_path / "bucketed"), n_buckets=4)
-    try:
-        bsrc = MetricsSource(spark, "metrics_budget_bucketed", bucketed=True)
-        bucketed = plan(bsrc.fetch({"name": ["cpu"]}, {}, START, END, 60_000))
-        assert not [ln for ln in bucketed.splitlines()
-                    if "Exchange" in ln and "series_key" in ln], bucketed
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_budget_bucketed")
 
 
 def test_ingest_read_families_warm_equals_cold(spark, tmp_path):

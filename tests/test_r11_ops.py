@@ -1,17 +1,11 @@
 """Round-11 regression tests: the r10 advisory fixes.
 
-1. streaming/docs.py `_model_nonempty` — missing model path is the ONLY
-   silent False; a corrupt model read propagates (fail-loud, epoch
-   replays instead of silently skipping cross-batch dedup).
-2. streaming/docs.py in-batch survivors — connected-component min-id,
-   identical to the batch `dedup_survivors` contract (the old greedy
-   local-minima rule diverged on 1~3~2 chains).
-3. minhash_update / ivf_update — duplicate ids inside one delta cannot
+1. minhash_update / ivf_update — duplicate ids inside one delta cannot
    seed duplicate model/index rows (replay / re-crawled batch guard).
-4. ivf_kmeans_topk — missing queries= fails with a clear ValueError;
+2. ivf_kmeans_topk — missing queries= fails with a clear ValueError;
    fit-only knobs are rejected in model= mode instead of silently
    ignored.
-5. textprep.rebalance_if_narrow — shuffles a 1-split corpus up to
+3. textprep.rebalance_if_narrow — shuffles a 1-split corpus up to
    defaultParallelism, and is a no-op (same plan object) on an input
    that is already at least that wide.
 """
@@ -27,162 +21,7 @@ def _words(n, prefix="w"):
 
 
 # ---------------------------------------------------------------------------
-# 1. _model_nonempty fail-loud contract
-# ---------------------------------------------------------------------------
-
-
-def test_model_nonempty_missing_path_is_false(spark, tmp_path):
-    from time_series_db_spark.streaming.docs import _model_nonempty
-
-    assert _model_nonempty(spark, str(tmp_path / "never_written")) is False
-
-
-def test_model_nonempty_corrupt_model_raises(spark, tmp_path):
-    """A model directory that EXISTS but cannot be read as parquet must
-    raise, not report 'no model yet' — silently skipping the model-side
-    dedup would permanently append near-duplicates."""
-    from time_series_db_spark.streaming.docs import _model_nonempty
-
-    bad = tmp_path / "model"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"this is not a parquet file")
-    with pytest.raises(Exception):
-        _model_nonempty(spark, str(bad))
-
-
-def test_model_nonempty_present_model_is_true(spark, tmp_path):
-    from time_series_db_spark.streaming.docs import _model_nonempty
-
-    p = str(tmp_path / "model")
-    spark.createDataFrame([(1,)], "doc_id long").write.parquet(p)
-    assert _model_nonempty(spark, p) is True
-
-
-# ---------------------------------------------------------------------------
-# 2. in-batch survivors are connected-component canonical
-# ---------------------------------------------------------------------------
-
-
-def test_doc_ingest_inbatch_survivors_are_component_min(spark, tmp_path):
-    """Path graph 1~3~2 (doc 3 near-dups BOTH 1 and 2; 1 and 2 are not
-    near-dups of each other): the old greedy drop-if-smaller-neighbor
-    rule kept {1, 2} (local minima); the batch `dedup_survivors`
-    contract keeps exactly the component minimum {1}.  The streaming
-    gate must match the batch operator."""
-    from time_series_db_spark.pipeline import dedup
-    from time_series_db_spark.streaming.docs import (
-        ingest_doc_batch,
-        read_corpus,
-    )
-
-    # 22 distinct words -> 20 3-shingles.  Changing 2 words at one end
-    # perturbs exactly 2 shingles: J(end-variant, base) = 18/22 ~ 0.818
-    # >= 0.8, J(start-variant, end-variant) = 16/24 ~ 0.667 < 0.8.
-    base = _words(22)
-    start_var = "aa0 aa1 " + _words(20, "x")[8:]  # placeholder, built below
-    toks = base.split()
-    start_var = " ".join(["aa0", "aa1"] + toks[2:])
-    end_var = " ".join(toks[:-2] + ["zz0", "zz1"])
-
-    rows = [(1, start_var), (3, base), (2, end_var)]
-    batch = spark.createDataFrame(
-        [(i, t, "crawl") for i, t in rows],
-        "doc_id long, text string, source string",
-    )
-
-    # sanity: the pair graph really is the path 1-3, 2-3
-    sigs = dedup.minhash_signatures(
-        batch.select("doc_id", "text")
-    )
-    pairs = dedup.jaccard_verify(
-        dedup.lsh_candidate_pairs(sigs), sigs
-    ).filter(F.col("jaccard") >= 0.8)
-    edge_set = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert edge_set == {(1, 3), (2, 3)}
-
-    store, model = str(tmp_path / "s"), str(tmp_path / "m")
-    ingest_doc_batch(spark, batch, store, model)
-    kept = {r["doc_id"] for r in read_corpus(spark, store).collect()}
-    assert kept == {1}, "survivor must be the component min, not local minima"
-    # the model holds exactly the survivors' signatures
-    assert {r["doc_id"] for r in spark.read.parquet(model).collect()} == {1}
-
-    # and it matches the batch operator on the same inputs
-    batch_kept = {
-        r["doc_id"]
-        for r in dedup.dedup_survivors(batch, pairs).select("doc_id").collect()
-    }
-    assert batch_kept == kept
-
-
-@pytest.mark.slow
-def test_doc_ingest_per_batch_cost_is_model_size_invariant(spark, tmp_path):
-    """Throughput certification of the incremental-crawl claim
-    ("per-batch cost ∝ batch, never the accumulated corpus"): the same
-    batch ingested against a 10× larger accumulated model must not get
-    materially slower.  Measured off-harness (BASELINE.md r11): 2k
-    model rows 7.3 s vs 20k rows 6.1 s median — flat, because the
-    batch-sized band table is the small side of the candidate join and
-    the model is scanned, never shuffled.  The 2.5× bound leaves wide
-    slack over timing noise while still failing on anything resembling
-    O(model) join work per batch."""
-    import shutil
-    import statistics
-    import time
-
-    from pyspark.sql import functions as F
-
-    from time_series_db_spark.cache import release_all
-    from time_series_db_spark.pipeline import dedup
-    from time_series_db_spark.streaming.docs import ingest_doc_batch
-
-    def synth(n, start):
-        return spark.range(start, start + n).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                *[
-                    F.concat(
-                        F.lit(f"w{j}_"),
-                        ((F.col("id") * F.lit(31 + j)) % F.lit(99991)).cast(
-                            "string"
-                        ),
-                    )
-                    for j in range(25)
-                ],
-            ).alias("text"),
-            F.lit("crawl").alias("source"),
-        )
-
-    batch = synth(100, 0)
-
-    def median_batch_time(model_rows, tag):
-        model_path = str(tmp_path / f"model_{tag}")
-        dedup.minhash_fit(synth(model_rows, 10_000_000)).write.parquet(
-            model_path
-        )
-        times = []
-        for i in range(3):
-            mp = str(tmp_path / f"model_{tag}_run{i}")
-            shutil.copytree(model_path, mp)
-            t0 = time.time()
-            ingest_doc_batch(
-                spark, batch, str(tmp_path / f"store_{tag}_{i}"), mp
-            )
-            times.append(time.time() - t0)
-            release_all()
-        return statistics.median(times[1:])  # first run absorbs JIT
-
-    t_small = median_batch_time(1000, "1x")
-    t_big = median_batch_time(10000, "10x")
-    assert t_big < t_small * 2.5, (
-        f"per-batch ingest cost grew with the accumulated model: "
-        f"{t_small:.2f}s @1k rows -> {t_big:.2f}s @10k rows"
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. duplicate ids inside one delta
+# 1. duplicate ids inside one delta
 # ---------------------------------------------------------------------------
 
 
@@ -230,7 +69,7 @@ def test_ivf_update_dedups_delta_ids(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. ivf_kmeans_topk argument validation
+# 2. ivf_kmeans_topk argument validation
 # ---------------------------------------------------------------------------
 
 
@@ -264,7 +103,7 @@ def test_ivf_kmeans_topk_rejects_fit_knobs_in_model_mode(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. rebalance_if_narrow
+# 3. rebalance_if_narrow
 # ---------------------------------------------------------------------------
 
 

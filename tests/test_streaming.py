@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,7 @@ from time_series_db_spark.sources import fetch_events
 from time_series_db_spark.streaming import (
     DEFAULT_BLOCK_MS,
     INGEST_SCHEMA,
+    SinkLoggedTableError,
     apply_retention,
     compact_blocks,
     ingest_batch,
@@ -186,6 +188,45 @@ def test_compaction_preserves_rows(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(table).select("series_key", "ts", "value").collect()
     )
     assert after == before
+
+
+@pytest.mark.parametrize("writer", ["compact", "retention", "append"])
+def test_batch_writers_refuse_sink_logged_table(spark, tmp_path, writer):
+    """Batch reads of a stream-written table list its files from the
+    file sink's _spark_metadata log. Compacting it or dropping one of
+    its two blocks would break the next read (FILE_NOT_EXIST), and a
+    batch append would land files no read sees, so each of the three
+    raises SinkLoggedTableError and the table reads as before."""
+    src = tmp_path / "in"
+    src.mkdir()
+    table = str(tmp_path / "metrics")
+    (src / "b1.json").write_text(
+        "\n".join(
+            _doc(f"name cpu host h{i}", T0 + j * H, float(i * 10 + j))
+            for i in range(3) for j in range(4)
+        )
+    )
+    q = start_ingest(spark, str(src), table, available_now=True)
+    q.awaitTermination(120)
+    assert list_blocks(table) == [T0, T0 + 2 * H]
+
+    def rows():
+        return sorted(tuple(r) for r in read_metrics(spark, table).collect())
+
+    before = rows()
+    assert len(before) == 12
+    with pytest.raises(SinkLoggedTableError, match=re.escape(table)):
+        if writer == "compact":
+            compact_blocks(spark, table, min_files=1)
+        elif writer == "retention":  # drops block T0 alone
+            apply_retention(table, 2 * H, T0 + 4 * H, DEFAULT_BLOCK_MS)
+        else:
+            ingest_batch(spark, spark.createDataFrame(
+                [("name cpu host h9", T0 + i * 60_000, float(i)) for i in range(10)],
+                INGEST_SCHEMA,
+            ), table)
+    assert list_blocks(table) == [T0, T0 + 2 * H]
+    assert rows() == before
 
 
 def test_stats_sections(spark, sf_dir, duck):
@@ -718,72 +759,16 @@ def test_batch_sessionize_semantics(spark):
     }
 
 
-def test_bucketed_store_elides_series_exchange(spark, tmp_path):
-    """ingest_batch_bucketed bakes series clustering into storage:
-    reading back and running a per-series window (derivative) must plan
-    ZERO hashpartitioning exchanges on series_key — the scan's bucket
-    partitioning satisfies the window's distribution — while the plain
-    table pays one. Values are identical either way."""
-    from time_series_db_spark.model import SeriesFrame
-    from time_series_db_spark.operators import windows
-    from time_series_db_spark.streaming import (
-        INGEST_SCHEMA,
-        ingest_batch,
-        ingest_batch_bucketed,
-        read_metrics,
-        read_metrics_bucketed,
-    )
-
-    docs = spark.createDataFrame(
-        [(f"name cpu host h{i % 7}", T0 + j * H, float(i + j))
-         for i in range(7) for j in range(6)],
-        INGEST_SCHEMA,
-    )
-    plain_path = str(tmp_path / "plain")
-    ingest_batch(spark, docs, plain_path)
-    spark.sql("DROP TABLE IF EXISTS metrics_bucketed_test")
-    ingest_batch_bucketed(
-        spark, docs, "metrics_bucketed_test",
-        path=str(tmp_path / "bucketed"), n_buckets=4,
-    )
-    try:
-        def deriv(df):
-            sf = SeriesFrame(
-                df=df.withColumn("alias", F.lit(None).cast("string"))
-                     .select(*SAMPLE_COLS),
-                step=H, min_ts=T0, max_ts=T0 + 6 * H,
-            )
-            return windows.derivative(sf).df
-
-        plain = deriv(read_metrics(spark, plain_path))
-        bucketed = deriv(read_metrics_bucketed(spark, "metrics_bucketed_test"))
-
-        def n_series_exchanges(df):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return sum(
-                1 for line in plan.splitlines()
-                if "Exchange hashpartitioning" in line and "series_key" in line
-            )
-
-        assert n_series_exchanges(plain) >= 1
-        assert n_series_exchanges(bucketed) == 0
-        a = sorted((r.series_key, r.ts, r.value) for r in plain.collect())
-        b = sorted((r.series_key, r.ts, r.value) for r in bucketed.collect())
-        assert a == b and a
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_bucketed_test")
-
-
 def test_ingest_to_m3ql_query_loop(spark, tmp_path):
     """The reference's full lifecycle on our engine: bulk docs →
-    (bucketed) ingest → M3QL and PromQL queries through the language
+    ingest → M3QL and PromQL queries through the language
     front-ends via MetricsSource — with tag wildcards, negation, a
     grouped aggregation, and a window stage."""
     from time_series_db_spark import service
     from time_series_db_spark.lang.m3.builder import execute as m3ql
     from time_series_db_spark.lang.prom.builder import execute as promql
     from time_series_db_spark.sources.m3source import MetricsSource
-    from time_series_db_spark.streaming import INGEST_SCHEMA, ingest_batch_bucketed
+    from time_series_db_spark.streaming import INGEST_SCHEMA, ingest_batch
 
     docs = spark.createDataFrame(
         [(f"name req host h{i % 2} dc {'east' if i % 3 else 'west'}",
@@ -792,45 +777,40 @@ def test_ingest_to_m3ql_query_loop(spark, tmp_path):
         + [(f"name err host h0 dc east", T0 + j * H, float(j)) for j in range(4)],
         INGEST_SCHEMA,
     )
-    spark.sql("DROP TABLE IF EXISTS metrics_loop_test")
-    ingest_batch_bucketed(
-        spark, docs, "metrics_loop_test", path=str(tmp_path / "loop"),
+    table = str(tmp_path / "loop")
+    ingest_batch(spark, docs, table)
+    src = MetricsSource(spark, table)
+    end = T0 + 4 * H
+
+    sf = m3ql("fetch name:req dc:east | sum host", src, T0, end, H)
+    rows = {(r.labels["host"], r.ts): r.value for r in sf.df.collect()}
+    # east = i in {1,2} → host h1 (i=1) and h0 (i=2)
+    assert rows[("h1", T0)] == 10.0 and rows[("h0", T0)] == 20.0
+    assert rows[("h1", T0 + 3 * H)] == 13.0
+
+    # wildcard + negation through the same path
+    sf = m3ql("fetch name:* host:!h1 | sum", src, T0, end, H)
+    got = {r.ts: r.value for r in sf.df.collect()}
+    # h0 series: req i∈{0,2} + err → (0+j)+(20+j)+j at each step
+    assert got[T0] == 20.0 and got[T0 + 1 * H] == 23.0
+
+    # a window stage over the ingested store
+    sf = m3ql("fetch name:err | derivative", src, T0, end, H)
+    assert {r.value for r in sf.df.collect()} == {1.0}
+
+    # PromQL against the same source
+    sf = promql('sum by (dc) (req{host=~"h.*"})', src, T0, end, H)
+    by_dc = {(r.labels["dc"], r.ts): r.value for r in sf.df.collect()}
+    assert by_dc[("west", T0)] == 30.0   # i=0 (10*0) + i=3 (30)
+    assert by_dc[("east", T0)] == 30.0   # i=1 + i=2
+
+    # and the service facade end-to-end (matrix JSON shape)
+    m = service.m3ql_query_range(
+        src, "fetch name:err | sum", start=T0, end=end, step=H,
     )
-    try:
-        src = MetricsSource(spark, "metrics_loop_test", bucketed=True)
-        end = T0 + 4 * H
-
-        sf = m3ql("fetch name:req dc:east | sum host", src, T0, end, H)
-        rows = {(r.labels["host"], r.ts): r.value for r in sf.df.collect()}
-        # east = i in {1,2} → host h1 (i=1) and h0 (i=2)
-        assert rows[("h1", T0)] == 10.0 and rows[("h0", T0)] == 20.0
-        assert rows[("h1", T0 + 3 * H)] == 13.0
-
-        # wildcard + negation through the same path
-        sf = m3ql("fetch name:* host:!h1 | sum", src, T0, end, H)
-        got = {r.ts: r.value for r in sf.df.collect()}
-        # h0 series: req i∈{0,2} + err → (0+j)+(20+j)+j at each step
-        assert got[T0] == 20.0 and got[T0 + 1 * H] == 23.0
-
-        # a window stage over the ingested store
-        sf = m3ql("fetch name:err | derivative", src, T0, end, H)
-        assert {r.value for r in sf.df.collect()} == {1.0}
-
-        # PromQL against the same source
-        sf = promql('sum by (dc) (req{host=~"h.*"})', src, T0, end, H)
-        by_dc = {(r.labels["dc"], r.ts): r.value for r in sf.df.collect()}
-        assert by_dc[("west", T0)] == 30.0   # i=0 (10*0) + i=3 (30)
-        assert by_dc[("east", T0)] == 30.0   # i=1 + i=2
-
-        # and the service facade end-to-end (matrix JSON shape)
-        m = service.m3ql_query_range(
-            src, "fetch name:err | sum", start=T0, end=end, step=H,
-        )
-        assert m["status"] == "success"
-        [series] = m["data"]["result"]
-        assert [v for _, v in series["values"]] == ["0", "1", "2", "3"]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_loop_test")
+    assert m["status"] == "success"
+    [series] = m["data"]["result"]
+    assert [v for _, v in series["values"]] == ["0", "1", "2", "3"]
 
 
 def test_service_promql_r5_surface(spark, sf_dir):
@@ -1082,59 +1062,6 @@ def test_prom_metadata_endpoints(spark, sf_dir):
         service.prom_series(src, [], start=s, end=e)
     with pytest.raises(ValueError, match="label name"):
         service.prom_label_values(src, "", start=s, end=e)
-
-
-def test_streaming_ingest_bucketed(spark, tmp_path):
-    """foreachBatch commit into the bucketed store: micro-batches land
-    with the bucket layout (per-series window plans zero series_key
-    exchanges), checkpointed runs only process new files, and the read
-    path dedups replays ANY_WINS."""
-    from time_series_db_spark.streaming import read_metrics_bucketed
-    from time_series_db_spark.streaming.ingest import start_ingest_bucketed
-
-    src = tmp_path / "in"
-    src.mkdir()
-    path = str(tmp_path / "bucketed_stream")
-    spark.sql("DROP TABLE IF EXISTS metrics_stream_bucketed_test")
-    (src / "b1.json").write_text(
-        "\n".join(
-            _doc(f"name cpu host h{i % 3}", T0 + j * H, float(i + j))
-            for i in range(3) for j in range(4)
-        )
-    )
-    q = start_ingest_bucketed(
-        spark, str(src), "metrics_stream_bucketed_test", path=path,
-        n_buckets=4, available_now=True,
-    )
-    q.awaitTermination(120)
-    try:
-        out = read_metrics_bucketed(spark, "metrics_stream_bucketed_test")
-        assert out.count() == 12
-        # bucket clustering survives the streaming commit: a per-series
-        # aggregation plans no series_key exchange
-        agg = (
-            spark.table("metrics_stream_bucketed_test")
-            .groupBy("series_key").count()
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(series_key" not in plan
-
-        # second drain: only the new file lands (checkpoint)
-        (src / "b2.json").write_text(
-            _doc("name cpu host h0", T0 + 10 * H, 42.0)
-        )
-        q = start_ingest_bucketed(
-            spark, str(src), "metrics_stream_bucketed_test", path=path,
-            n_buckets=4, available_now=True,
-        )
-        q.awaitTermination(120)
-        out2 = read_metrics_bucketed(spark, "metrics_stream_bucketed_test")
-        assert out2.count() == 13
-    finally:
-        spark.sql("DROP TABLE IF EXISTS metrics_stream_bucketed_test")
-
-    with pytest.raises(ValueError, match="checkpoint_dir"):
-        start_ingest_bucketed(spark, str(src), "t_nochk")
 
 
 def test_recording_rule_stream_and_backfill(spark, tmp_path):
@@ -1769,87 +1696,6 @@ def test_backfill_rules_prefilter_matches_unfiltered(spark, tmp_path):
     assert got == solo
 
 
-def test_streaming_asof_enrich_equals_batch_asof(spark, tmp_path):
-    """The stream-stream as-of enrichment (watermarked range join +
-    append-mode max_by finalization) must produce EXACTLY the batch
-    asof_join with the same tolerance — including NULLs for unmatched
-    left events and greatest-tiebreak resolution of timestamp ties."""
-    import json as _json
-
-    from time_series_db_spark.operators.temporal import asof_join
-    from time_series_db_spark.streaming.enrich import streaming_asof_enrich
-
-    lsrc, rsrc = tmp_path / "l", tmp_path / "r"
-    lsrc.mkdir(); rsrc.mkdir()
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    lrows = [
-        {"event_id": i, "user_id": i % 3, "ts": T0 + i * 10_000,
-         "value": float(i)}
-        for i in range(20)
-    ]
-    # right stream includes a timestamp tie: events 100 and 121 share
-    # (user 0, T0) — the greater event_id must win
-    rrows = [
-        {"event_id": 100 + i, "user_id": i % 3, "ts": T0 + i * 7_000,
-         "value": 100.0 + i}
-        for i in range(20)
-    ] + [{"event_id": 121, "user_id": 0, "ts": T0, "value": 999.0}]
-    (lsrc / "a.json").write_text(
-        "\n".join(_json.dumps(r) for r in lrows)
-    )
-    (rsrc / "a.json").write_text(
-        "\n".join(_json.dumps(r) for r in rrows)
-    )
-    schema = "event_id long, user_id long, ts long, value double"
-    tol = 30_000
-
-    def run_pass():
-        l = spark.readStream.schema(schema).json(str(lsrc))
-        r = spark.readStream.schema(schema).json(str(rsrc))
-        q = (
-            streaming_asof_enrich(
-                l, r, on=["user_id"], tolerance_ms=tol,
-                watermark="1 minute",
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    run_pass()
-    # sentinel far ahead on both sides advances the persisted watermark
-    # so the first batch's groups finalize on the second pass
-    flush = [{"event_id": 9999, "user_id": 99, "ts": T0 + 10**9,
-              "value": 0.0}]
-    (lsrc / "b.json").write_text("\n".join(_json.dumps(r) for r in flush))
-    (rsrc / "b.json").write_text("\n".join(_json.dumps(r) for r in flush))
-    run_pass()
-
-    got = sorted(
-        (r.event_id, r.ts_r, r.value_r)
-        for r in spark.read.parquet(out).filter("user_id < 99").collect()
-    )
-    ref = asof_join(
-        spark.createDataFrame([tuple(r.values()) for r in lrows], schema),
-        spark.createDataFrame([tuple(r.values()) for r in rrows], schema),
-        on=["user_id"], ts_col="ts", right_cols=["value"],
-        tiebreak_col="event_id", tolerance_ms=tol,
-    )
-    want = sorted((r.event_id, r.ts_r, r.value_r) for r in ref.collect())
-    assert got == want and len(got) == 20
-
-    from time_series_db_spark.streaming.enrich import streaming_asof_enrich as s
-
-    with pytest.raises(ValueError, match="tolerance"):
-        s(spark.readStream.schema(schema).json(str(lsrc)),
-          spark.readStream.schema(schema).json(str(rsrc)),
-          on=["user_id"], tolerance_ms=0)
-
-
 def test_read_metrics_tag_filter_pushes_below_dedup(spark, tmp_path):
     """A tag filter over read_metrics must sit BELOW the ANY_WINS dedup
     aggregation in the physical plan (it is a function of the grouping
@@ -1899,107 +1745,3 @@ def test_query_range_rejects_nonpositive_step(spark):
             )
         with pytest.raises(ValueError, match="step must be"):
             service.promql_query(src, "error", EVENTS_MIN_TS, step)
-
-
-@pytest.mark.slow
-def test_doc_ingest_dedups_across_batches(spark, tmp_path):
-    """Streaming incremental-crawl loop (streaming/docs.py): batch 1
-    seeds the store + model (in-batch near-dup dropped, min-id wins);
-    batch 2's near-dup of a batch-1 SURVIVOR is dropped via the
-    persisted model — the cross-batch memory is the whole point — while
-    its genuinely-new doc lands; the model grows by exactly the
-    survivors' signatures."""
-    import json
-
-    from time_series_db_spark.streaming.docs import (
-        read_corpus,
-        start_doc_ingest,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "corpus")
-    model = str(tmp_path / "model")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_batch(name, rows):
-        (src / name).write_text(
-            "\n".join(
-                json.dumps({"doc_id": i, "text": t, "source": "crawl"})
-                for i, t in rows
-            )
-        )
-        q = start_doc_ingest(
-            spark, str(src), store, model, ckpt, available_now=True
-        )
-        q.awaitTermination(120)
-
-    a = "the quick brown fox jumps over the lazy dog tonight"
-    b = "pack my box with five dozen fresh liquor jugs today"
-    run_batch("b1.json", [
-        (1, a),
-        (2, b),
-        (3, a + " again"),   # in-batch near-dup of 1 → dropped (min id)
-    ])
-    kept1 = {r["doc_id"] for r in read_corpus(spark, store).collect()}
-    assert kept1 == {1, 2}
-    n_model1 = spark.read.parquet(model).count()
-    assert n_model1 == 2
-
-    c = "completely unrelated sentence about training data decks"
-    run_batch("b2.json", [
-        (4, b + " again"),   # cross-BATCH near-dup of stored 2 → dropped
-        (5, c),              # genuinely new → kept
-    ])
-    kept2 = {r["doc_id"] for r in read_corpus(spark, store).collect()}
-    assert kept2 == {1, 2, 5}
-    assert spark.read.parquet(model).count() == 3
-    # the read path's ANY_WINS dedup absorbs a duplicate append
-    spark.createDataFrame(
-        [(5, c, "crawl")], "doc_id long, text string, source string"
-    ).write.mode("append").parquet(store)
-    assert {r["doc_id"] for r in read_corpus(spark, store).collect()} == {
-        1, 2, 5,
-    }
-
-
-def test_doc_ingest_batch_hashes_text_once(spark, monkeypatch, tmp_path):
-    """The micro-batch hot path must compute MinHash signatures exactly
-    ONCE per batch — the model dedup, the in-batch dedup and the model
-    append all consume the same table (a 3× text-hash pass caught in
-    review); and the atomic-row store read never stitches columns from
-    two appends of the same id."""
-    from time_series_db_spark.pipeline import dedup
-    from time_series_db_spark.streaming.docs import (
-        ingest_doc_batch,
-        read_corpus,
-    )
-
-    calls = []
-    real = dedup.minhash_signatures
-
-    def counting(df, *a, **kw):
-        calls.append(1)
-        return real(df, *a, **kw)
-
-    monkeypatch.setattr(dedup, "minhash_signatures", counting)
-    batch = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog", "a"),
-         (2, "pack my box with five dozen fresh liquor jugs", "a")],
-        "doc_id long, text string, source string",
-    )
-    store, model = str(tmp_path / "s"), str(tmp_path / "m")
-    ingest_doc_batch(spark, batch, store, model)
-    assert len(calls) == 1, "batch text must be hashed exactly once"
-    # frankenstein guard: same id appended twice with different content
-    spark.createDataFrame(
-        [(1, "zzz replacement text", "b")],
-        "doc_id long, text string, source string",
-    ).write.mode("append").parquet(store)
-    rows = {r["doc_id"]: r for r in read_corpus(spark, store).collect()}
-    r1 = rows[1]
-    legal = {
-        ("the quick brown fox jumps over the lazy dog", "a"),
-        ("zzz replacement text", "b"),
-    }
-    assert (r1["text"], r1["source"]) in legal  # a whole row, not a mix

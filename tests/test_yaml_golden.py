@@ -91,6 +91,9 @@ def test_yaml_matrix_metadata_block(spark, tables_for):
     from time_series_db_spark.output import to_matrix
 
     suite_name = "golden_dataset_rest_it.yaml"
+    path = os.path.join(H.CASES_DIR, suite_name)
+    if not os.path.exists(path):
+        pytest.skip(f"reference suite not found: {path}")
     suite = _suite(suite_name)
     qcfg = suite["test_case"]["queries"][0]
     sf = H.run_query(

@@ -981,7 +981,7 @@ def promql_count_values(spark, sf_dir):
 
 
 from time_series_db_spark.catalog import SQL_SERIES_KEY
-from time_series_db_spark.pipeline.textprep import sql_hash64
+from time_series_db_spark.model import sql_hash64
 
 
 @register(

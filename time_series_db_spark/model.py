@@ -80,6 +80,26 @@ def labels_from_key_expr(key_col: Column) -> Column:
     ).otherwise(F.str_to_map(key_col, F.lit(_PAIR_SEP), F.lit(_KV_SEP)))
 
 
+def hash64(col: Column, seed: int | str = 0, fn: str = "md5") -> Column:
+    """Deterministic 60-bit hash of a string column.
+
+    ``md5`` variant: first 15 hex chars of md5("<seed>:<value>") as a
+    BIGINT — portable across engines (DuckDB: ``('0x' || substr(md5(..),
+    1, 15))::BIGINT``). ``xxhash64`` variant: Spark-native, for
+    production runs where the oracle is not in the loop.
+    """
+    if fn == "xxhash64":
+        return F.xxhash64(F.lit(str(seed)), col)
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
+    ).cast("long")
+
+
+def sql_hash64(expr: str, seed: int | str = 0) -> str:
+    """DuckDB rendering of :func:`hash64` (md5 variant)."""
+    return f"('0x' || substr(md5('{seed}:' || ({expr})), 1, 15))::BIGINT"
+
+
 def labels_subset_expr(keys: list[str], labels_col: Column = None) -> Column:
     """Map containing only ``keys`` — used by grouping stages where only the
     group-by labels survive into output labels (AbstractGroupingStage.java:69-75)."""

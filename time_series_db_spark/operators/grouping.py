@@ -23,6 +23,7 @@ from time_series_db_spark.model import (
     SAMPLE_COLS,
     SeriesFrame,
     has_all_keys_expr,
+    hash64,
     labels_from_key_expr,
     labels_subset_expr,
     series_key_expr,
@@ -1135,8 +1136,6 @@ def limit_ratio(
     group-independent, as upstream)."""
     if not -1.0 <= r <= 1.0:
         raise ValueError("limit_ratio r must be in [-1, 1]")
-    from time_series_db_spark.pipeline.textprep import hash64
-
     df = _with_group_key(sf.df, list(keys), without)
     u = (hash64(F.col("series_key"), "lr") % 1_000_000) / 1_000_000.0
     cond = u < float(r) if r >= 0 else u >= 1.0 + float(r)

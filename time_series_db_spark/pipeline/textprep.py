@@ -2,7 +2,8 @@
 
 Everything here returns Catalyst Column expressions (no UDFs): the hot
 path stays inside whole-stage codegen and scales linearly with input
-splits. The portable 64-bit hash is md5-based so the DuckDB differential
+splits. The portable 64-bit hash (``model.hash64``, re-exported here
+with ``sql_hash64``) is md5-based so the DuckDB differential
 oracle computes bit-identical values; at production scale swap
 ``hash_fn="xxhash64"`` (JVM-native, ~10× faster, no hex round-trip) —
 the LSH math is hash-agnostic.
@@ -12,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from time_series_db_spark.model import hash64, sql_hash64  # noqa: F401
 
 
 def rebalance_if_narrow(df: DataFrame) -> DataFrame:
@@ -36,26 +39,6 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
 #: acc < 1e9+7, acc*131 + h < 2^63)
 FP_MOD = 1_000_000_007
 FP_BASE = 131
-
-
-def hash64(col: Column, seed: int | str = 0, fn: str = "md5") -> Column:
-    """Deterministic 60-bit hash of a string column.
-
-    ``md5`` variant: first 15 hex chars of md5("<seed>:<value>") as a
-    BIGINT — portable across engines (DuckDB: ``('0x' || substr(md5(..),
-    1, 15))::BIGINT``). ``xxhash64`` variant: Spark-native, for
-    production runs where the oracle is not in the loop.
-    """
-    if fn == "xxhash64":
-        return F.xxhash64(F.lit(str(seed)), col)
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def sql_hash64(expr: str, seed: int | str = 0) -> str:
-    """DuckDB rendering of :func:`hash64` (md5 variant)."""
-    return f"('0x' || substr(md5('{seed}:' || ({expr})), 1, 15))::BIGINT"
 
 
 def normalize(col: Column) -> Column:

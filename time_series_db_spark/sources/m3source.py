@@ -220,10 +220,9 @@ class MetricsSource:
     """M3Source over an INGESTED metrics table (streaming/ingest.py) —
     closes the write-read loop: bulk docs → Structured Streaming ingest →
     M3QL/PromQL query, the reference's own lifecycle (TSDBEngine.index →
-    RestM3QLAction query). Accepts a parquet path or, with
-    ``bucketed=True``, a catalog table written by
-    ``ingest_batch_bucketed`` — then per-series stages downstream plan
-    zero series_key exchanges.
+    RestM3QLAction query). ``table`` is the parquet path of a metrics
+    table that ``streaming.ingest`` writes (the stream, ``ingest_batch``,
+    the wire ingests or a recording rule).
 
     A fetch is one pass, as the reference's shard-level
     ``time_series_unfold`` is (TimeSeriesUnfoldAggregator.java:270-320):
@@ -257,12 +256,10 @@ class MetricsSource:
         self,
         spark: SparkSession,
         table: str,
-        bucketed: bool = False,
         rollups: list[dict] | None = None,
     ):
         self.spark = spark
         self.table = table
-        self.bucketed = bucketed
         for r in rollups or []:
             if int(r["resolution_ms"]) <= 0:
                 raise ValueError("rollup resolution_ms must be positive")
@@ -280,10 +277,7 @@ class MetricsSource:
         match_re: dict[str, list[str]] | None = None,
         inverse_re: dict[str, list[str]] | None = None,
     ) -> SeriesFrame:
-        from time_series_db_spark.streaming.ingest import (
-            prune_blocks,
-            scan_metrics,
-        )
+        from time_series_db_spark.streaming.ingest import scan_metrics
 
         # namespace selection: coarsest rollup whose resolution fits the
         # query grid (rollups sorted ascending) — else the raw table
@@ -298,8 +292,6 @@ class MetricsSource:
                 self.spark, chosen["path"], chosen.get("agg", "last"),
                 min_ts=min_ts, max_ts=max_ts,
             )
-        elif self.bucketed:
-            df = prune_blocks(self.spark.table(self.table), min_ts, max_ts)
         else:
             df = scan_metrics(self.spark, self.table, min_ts, max_ts)
         # the read has listed the table's files: a listing that differs

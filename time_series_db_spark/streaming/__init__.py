@@ -6,12 +6,11 @@ from time_series_db_spark.streaming.ingest import (  # noqa: F401
     DEFAULT_BLOCK_MS,
     DEFAULT_OOO_CUTOFF,
     INGEST_SCHEMA,
+    SinkLoggedTableError,
     ingest_batch,
-    ingest_batch_bucketed,
     ingestion_lag,
     parse_ingest,
     read_metrics,
-    read_metrics_bucketed,
     start_ingest,
 )
 from time_series_db_spark.streaming.maintenance import (  # noqa: F401

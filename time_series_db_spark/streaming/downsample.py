@@ -25,6 +25,12 @@ longer-retention namespace      separate table ⇒ separate retention sweep
                                 (maintenance.apply_retention)
 ==============================  ===========================================
 
+The streaming leg writes through Spark's file sink, so its rollup table
+carries a ``_spark_metadata`` log: ``apply_retention`` and
+``compact_blocks`` raise ``SinkLoggedTableError`` on it rather than
+break its reads. Tables :func:`cascade_rollup` builds are batch-written
+and keep both sweeps.
+
 Scale design: the rollup aggregation is hash-partitioned by
 (series_key, window) — no per-executor global state, partial aggregation
 combines map-side, and the output table is block-partitioned exactly
@@ -35,8 +41,6 @@ raw leg's dedup state carries.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,10 +50,10 @@ from time_series_db_spark.model import labels_from_key_expr
 from time_series_db_spark.streaming.ingest import (
     DEFAULT_BLOCK_MS,
     DEFAULT_OOO_CUTOFF,
-    INGEST_SCHEMA,
     dedup_samples,
-    parse_ingest,
+    ingest_stream,
     prune_blocks,
+    start_block_sink,
     write_blocks,
 )
 
@@ -99,14 +103,9 @@ def start_downsample(
     """
     if resolution_ms <= 0:
         raise ValueError(f"resolution_ms must be positive, got {resolution_ms}")
-    raw = spark.readStream.schema(INGEST_SCHEMA).json(source_dir)
-    samples = (
-        parse_ingest(raw, block_ms)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
-    )
     rolled = (
-        samples.groupBy(
+        ingest_stream(spark, source_dir, ooo_cutoff, block_ms)
+        .groupBy(
             "series_key",
             F.window("event_time", f"{resolution_ms} milliseconds"),
         )
@@ -127,19 +126,7 @@ def start_downsample(
             "block", F.col("ts") - F.col("ts") % F.lit(int(block_ms))
         )
     )
-    writer = (
-        rolled.writeStream.format("parquet")
-        .partitionBy("block")
-        .option("path", rollup_path)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(rollup_path, "_checkpoint"),
-        )
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_block_sink(rolled, rollup_path, checkpoint_dir, available_now)
 
 
 def scan_rollup(

@@ -116,6 +116,76 @@ def parse_ingest(raw: DataFrame, block_ms: int = DEFAULT_BLOCK_MS) -> DataFrame:
     )
 
 
+def ingest_stream(
+    spark: SparkSession,
+    source_dir: str,
+    ooo_cutoff: str,
+    block_ms: int,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The ingest documents landing in ``source_dir`` as a stream of
+    :func:`parse_ingest` rows plus an ``event_time`` column behind the
+    ``ooo_cutoff`` watermark — the front every JSON-fed leg shares (raw
+    ingest, rollups, recording and alert rules)."""
+    reader = spark.readStream.schema(INGEST_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        parse_ingest(reader.json(source_dir), block_ms)
+        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
+        .withWatermark("event_time", ooo_cutoff)
+    )
+
+
+def start_block_sink(
+    df: DataFrame,
+    table_path: str,
+    checkpoint_dir: str | None = None,
+    available_now: bool = False,
+) -> StreamingQuery:
+    """Append a stream to the block-partitioned parquet table at
+    ``table_path`` through Spark's file sink. The sink's
+    ``_spark_metadata`` log makes each micro-batch visible to batch
+    reads exactly once, and from then on batch reads list the table's
+    files from that log (see :class:`SinkLoggedTableError`). The
+    checkpoint defaults to ``<table>/_checkpoint``; ``available_now``
+    drains the current input and stops."""
+    writer = (
+        df.writeStream.format("parquet")
+        .partitionBy("block")
+        .option("path", table_path)
+        .option(
+            "checkpointLocation",
+            checkpoint_dir or os.path.join(table_path, "_checkpoint"),
+        )
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+class SinkLoggedTableError(RuntimeError):
+    """A batch writer or a maintenance job was pointed at a table that a
+    streaming file sink writes. Batch reads of such a table list its
+    files from the sink's ``_spark_metadata`` log, not the directory:
+    files a batch job adds are never read, and files it removes or
+    moves break the next read with ``FILE_NOT_EXIST``."""
+
+
+def check_not_sink_logged(table_path: str, action: str) -> None:
+    """Raise :class:`SinkLoggedTableError` when the (local) table at
+    ``table_path`` has a streaming file sink's log."""
+    if os.path.isdir(os.path.join(table_path, "_spark_metadata")):
+        raise SinkLoggedTableError(
+            f"cannot {action} {table_path}: a streaming file sink writes "
+            f"this table (it has a _spark_metadata log), and batch reads "
+            f"see only the files that log names, so files added here "
+            f"would never be read and files removed here would break the "
+            f"next read"
+        )
+
+
 def start_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -141,15 +211,10 @@ def start_ingest(
     tests and batch backfills; the default is a continuous micro-batch
     stream ("new series visible after refresh" ≈ commit latency).
     """
-    reader = spark.readStream.schema(INGEST_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.json(source_dir)
-
     samples = (
-        parse_ingest(raw, block_ms)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
+        ingest_stream(
+            spark, source_dir, ooo_cutoff, block_ms, max_files_per_trigger
+        )
         .dropDuplicatesWithinWatermark(["series_key", "ts"])
         .drop("event_time")
         # ingestion-lag gauge (TSDBIngestionLagIndexingListener.java:152
@@ -165,20 +230,7 @@ def start_ingest(
             F.count(F.lit(1)).alias("n_samples"),
         )
     )
-
-    writer = (
-        samples.writeStream.format("parquet")
-        .partitionBy("block")
-        .option("path", table_path)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(table_path, "_checkpoint"),
-        )
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_block_sink(samples, table_path, checkpoint_dir, available_now)
 
 
 def ingest_batch(
@@ -202,62 +254,13 @@ def write_blocks(df: DataFrame, path: str) -> None:
     dominant cost of batch backfills at bench scale). Clustered, the
     file count equals the block count; per-block volume is bounded by
     (series × samples per block), the same unit every reader prunes
-    on, so the write task skew is bounded too."""
+    on, so the write task skew is bounded too. A table a streaming
+    file sink writes raises :class:`SinkLoggedTableError`: its reads
+    would never see the appended files."""
+    check_not_sink_logged(path, "append blocks to")
     df.repartition(F.col("block")).write.mode("append").partitionBy(
         "block"
     ).parquet(path)
-
-
-def ingest_batch_bucketed(
-    spark: SparkSession,
-    docs: DataFrame,
-    table_name: str,
-    path: str | None = None,
-    n_buckets: int = 32,
-    block_ms: int = DEFAULT_BLOCK_MS,
-) -> None:
-    """Batch ingest into a series-bucketed, series/ts-sorted table — the
-    layout that makes per-series operators shuffle-free at read.
-
-    Every window stage in this engine partitions by ``series_key``; on a
-    plain parquet table each query pays one hash exchange to co-locate a
-    series. ``bucketBy(series_key) + sortBy(series_key, ts)`` bakes that
-    clustering into the storage layout (the reference's analog: one
-    Lucene index whose doc routing already groups a series' chunks on a
-    shard), so the scan reports hash-partitioning on ``series_key`` and
-    Catalyst elides the exchange under windows, per-series aggregations,
-    and the read-side dedup — at 100 TB this removes the dominant
-    shuffle from every fetch-through-window query. Bucket metadata
-    requires a catalog table (``saveAsTable``); ``path`` makes it
-    external.
-    """
-    samples = parse_ingest(docs, block_ms).dropDuplicates(["series_key", "ts"])
-    w = (
-        samples.write.mode("append")
-        .partitionBy("block")
-        .bucketBy(int(n_buckets), "series_key")
-        .sortBy("series_key", "ts")
-        .format("parquet")
-    )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
-
-
-def read_metrics_bucketed(
-    spark: SparkSession,
-    table_name: str,
-    min_ts: int | None = None,
-    max_ts: int | None = None,
-    block_ms: int = DEFAULT_BLOCK_MS,
-) -> DataFrame:
-    """Scan a bucketed metrics table — same pruning + ANY_WINS dedup as
-    :func:`read_metrics`, but the dedup aggregation (and any downstream
-    per-series window) inherits the bucket clustering instead of paying
-    an exchange."""
-    return dedup_samples(
-        prune_blocks(spark.table(table_name), min_ts, max_ts, block_ms)
-    )
 
 
 def ingestion_lag(query: StreamingQuery) -> dict | None:
@@ -385,73 +388,6 @@ def read_metrics(
     )
 
 
-def start_ingest_bucketed(
-    spark: SparkSession,
-    source_dir: str,
-    table_name: str,
-    path: str | None = None,
-    *,
-    n_buckets: int = 32,
-    ooo_cutoff: str = DEFAULT_OOO_CUTOFF,
-    block_ms: int = DEFAULT_BLOCK_MS,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Continuous ingest INTO the series-bucketed store: the streaming
-    front half of :func:`start_ingest` (watermark ooo cutoff +
-    in-stream (series, ts) dedup) committed through ``foreachBatch``
-    into the bucketed catalog table of :func:`ingest_batch_bucketed`.
-
-    ``bucketBy`` is not a streaming sink, but it IS a deterministic
-    batch write — ``foreachBatch`` gives each micro-batch the full batch
-    writer, so the stored layout keeps the property every per-series
-    operator depends on (scan-reported hash clustering on
-    ``series_key``, no exchange under windows). Exactly-once: the
-    foreachBatch append is idempotent per epoch only via the
-    checkpoint's epoch tracking — a replayed epoch re-appends, and the
-    read path's ANY_WINS (series, ts) dedup absorbs the duplicates,
-    the same contract the plain parquet sink already relies on.
-    """
-    if checkpoint_dir is None:
-        if path is None:
-            raise ValueError(
-                "start_ingest_bucketed needs checkpoint_dir when the "
-                "table has no external path"
-            )
-        # SIBLING of the table path, not inside it: saveAsTable manages
-        # the table directory's contents and would race the checkpoint
-        checkpoint_dir = path.rstrip("/") + "_checkpoint" 
-    raw = spark.readStream.schema(INGEST_SCHEMA).json(source_dir)
-    samples = (
-        parse_ingest(raw, block_ms)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
-        .dropDuplicatesWithinWatermark(["series_key", "ts"])
-        .drop("event_time")
-    )
-
-    def _commit(batch_df: DataFrame, epoch_id: int) -> None:
-        w = (
-            batch_df.write.mode("append")
-            .partitionBy("block")
-            .bucketBy(int(n_buckets), "series_key")
-            .sortBy("series_key", "ts")
-            .format("parquet")
-        )
-        if path is not None:
-            w = w.option("path", path)
-        w.saveAsTable(table_name)
-
-    writer = (
-        samples.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_text_wire_ingest(
     spark,
     source_dir: str,
@@ -474,10 +410,6 @@ def start_text_wire_ingest(
     watermark dedup first-write-wins, replayed epochs are absorbed by
     the read path's ANY_WINS merge.  Lines without a timestamp are
     dropped (a store row needs one)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     block = int(block_ms or DEFAULT_BLOCK_MS)
     lines = spark.readStream.text(source_dir)
     samples = (
@@ -489,16 +421,4 @@ def start_text_wire_ingest(
         .dropDuplicatesWithinWatermark(["series_key", "ts"])
         .drop("event_time")
     )
-    writer = (
-        samples.writeStream.format("parquet")
-        .partitionBy("block")
-        .option("path", table_path)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(table_path, "_checkpoint"),
-        )
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_block_sink(samples, table_path, checkpoint_dir, available_now)

@@ -36,6 +36,8 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from time_series_db_spark.streaming.ingest import check_not_sink_logged
+
 _BLOCK_DIR = re.compile(r"^block=(\d+)$")
 
 
@@ -57,7 +59,10 @@ def apply_retention(
     """Drop every block whose *entire* range [block, block+block_ms) is
     older than ``now - retention`` (TimeBasedRetention semantics: an index
     is only dropped when all its data has aged out). Returns dropped
-    block ids."""
+    block ids. A table a streaming file sink writes raises
+    ``SinkLoggedTableError``: its sink log would still name the dropped
+    files."""
+    check_not_sink_logged(table_path, "apply retention to")
     horizon = now_ms - retention_ms
     dropped = []
     for block in list_blocks(table_path):
@@ -83,8 +88,11 @@ def compact_blocks(
     gets from per-series XOR chunks — and rewritten as
     ``ceil(bytes/target)`` files. Atomicity: rewrite lands in a temp dir,
     then swaps in (rename) — readers between swaps see either version.
-    Returns the compacted block ids.
+    Returns the compacted block ids. A table a streaming file sink
+    writes raises ``SinkLoggedTableError``: its sink log would still
+    name the replaced files.
     """
+    check_not_sink_logged(table_path, "compact")
     done = []
     for block in blocks if blocks is not None else list_blocks(table_path):
         bdir = os.path.join(table_path, f"block={block}")

@@ -56,9 +56,9 @@ from time_series_db_spark.sources.m3source import tag_filter_predicate
 from time_series_db_spark.streaming.ingest import (
     DEFAULT_BLOCK_MS,
     DEFAULT_OOO_CUTOFF,
-    INGEST_SCHEMA,
     METRICS_COLS,
-    parse_ingest,
+    ingest_stream,
+    start_block_sink,
     write_blocks,
 )
 
@@ -153,6 +153,38 @@ def apply_rule_frame(
     )
 
 
+def _rule_stream(
+    spark: SparkSession, source_dir: str, r: dict, ooo_cutoff: str,
+    block_ms: int,
+) -> DataFrame:
+    """The compiled rule ``r`` over the ingest JSON stream: matched
+    samples aggregated per output series and ``window(event_time,
+    resolution)``, in metrics-store shape (METRICS_COLS) — the shared
+    front of the recording and alert rule streams."""
+    samples, out_labels = _match_and_label(
+        ingest_stream(spark, source_dir, ooo_cutoff, block_ms), r
+    )
+    res = r["resolution_ms"]
+    return (
+        samples.withColumn("series_key", series_key_expr(out_labels))
+        .groupBy(
+            "series_key",
+            F.window("event_time", f"{res} milliseconds"),
+        )
+        .agg(RULE_AGGS[r["agg"]]().alias("value"))
+        .select(
+            "series_key",
+            labels_from_key_expr(F.col("series_key")).alias("labels"),
+            F.unix_millis(F.col("window.start")).alias("ts"),
+            F.col("value").cast("double").alias("value"),
+        )
+        .withColumn(
+            "block", F.col("ts") - F.col("ts") % F.lit(int(block_ms))
+        )
+        .select(*METRICS_COLS)
+    )
+
+
 def start_recording_rule(
     spark: SparkSession,
     source_dir: str,
@@ -179,46 +211,10 @@ def start_recording_rule(
     clock, and a rule whose series go quiet holds its last window open
     until matched data resumes (it never emits a partial window early).
     """
-    r = compile_rule(rule)
-    raw = spark.readStream.schema(INGEST_SCHEMA).json(source_dir)
-    samples = (
-        parse_ingest(raw, block_ms)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
+    rolled = _rule_stream(
+        spark, source_dir, compile_rule(rule), ooo_cutoff, block_ms
     )
-    samples, out_labels = _match_and_label(samples, r)
-    res = r["resolution_ms"]
-    rolled = (
-        samples.withColumn("series_key", series_key_expr(out_labels))
-        .groupBy(
-            "series_key",
-            F.window("event_time", f"{res} milliseconds"),
-        )
-        .agg(RULE_AGGS[r["agg"]]().alias("value"))
-        .select(
-            "series_key",
-            labels_from_key_expr(F.col("series_key")).alias("labels"),
-            F.unix_millis(F.col("window.start")).alias("ts"),
-            F.col("value").cast("double").alias("value"),
-        )
-        .withColumn(
-            "block", F.col("ts") - F.col("ts") % F.lit(int(block_ms))
-        )
-        .select(*METRICS_COLS)
-    )
-    writer = (
-        rolled.writeStream.format("parquet")
-        .partitionBy("block")
-        .option("path", out_path)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(out_path, "_checkpoint"),
-        )
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_block_sink(rolled, out_path, checkpoint_dir, available_now)
 
 
 def backfill_recording_rule(
@@ -313,9 +309,7 @@ def dedup_rule_history(df: DataFrame) -> DataFrame:
     alert evaluation. foreachBatch delivery is at-least-once, so a
     replayed epoch (or a re-run backfill, mode=append) can double-append
     identical windows; duplicate ts rows would split the row_number
-    islands in :func:`evaluate_alert_frame` and corrupt run lengths.
-    The groupBy is keyed by the same (series_key) the downstream windows
-    partition by, so on a bucketed store it inherits the clustering."""
+    islands in :func:`evaluate_alert_frame` and corrupt run lengths."""
     return (
         df.groupBy("series_key", "ts")
         .agg(
@@ -443,33 +437,8 @@ def start_alert_rule(
     by. State is replayed deterministically from the store, surviving
     restarts without custom state-store code.
     """
-    a = compile_alert(spec)
-    r = a["rule"]
-    raw = spark.readStream.schema(INGEST_SCHEMA).json(source_dir)
-    samples = (
-        parse_ingest(raw, block_ms)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
-    )
-    samples, out_labels = _match_and_label(samples, r)
-    res = r["resolution_ms"]
-    rolled = (
-        samples.withColumn("series_key", series_key_expr(out_labels))
-        .groupBy(
-            "series_key",
-            F.window("event_time", f"{res} milliseconds"),
-        )
-        .agg(RULE_AGGS[r["agg"]]().alias("value"))
-        .select(
-            "series_key",
-            labels_from_key_expr(F.col("series_key")).alias("labels"),
-            F.unix_millis(F.col("window.start")).alias("ts"),
-            F.col("value").cast("double").alias("value"),
-        )
-        .withColumn(
-            "block", F.col("ts") - F.col("ts") % F.lit(int(block_ms))
-        )
-        .select(*METRICS_COLS)
+    rolled = _rule_stream(
+        spark, source_dir, compile_alert(spec)["rule"], ooo_cutoff, block_ms
     )
 
     epochs_path = os.path.join(rule_path, "_epoch_commits")
