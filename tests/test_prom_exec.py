@@ -325,3 +325,26 @@ def test_set_op_over_sorted_operands(spark):
     a = execute_promql("sort_desc(error) or click", src, e, e + 2 * s, s)
     b = execute_promql("error or click", src, e, e + 2 * s, s)
     assert key(a) == key(b)
+
+
+def test_stddev_stdvar_of_equal_series_are_zero(spark):
+    """stddev/stdvar across series that all hold one value are 0, as in
+    Prometheus. The E[v²] − E[v]² form rounds a few ulps below 0 for
+    three series at 0.1; unclamped, stdvar read −1.7e-18 and stddev
+    NaN."""
+    rows = [
+        ({"name": "x", "host": h}, T0 + i * H, 0.1)
+        for h in ("a", "b", "c") for i in range(4)
+    ]
+    src = _source(spark, rows)
+    for fn in ("stdvar", "stddev"):
+        assert list(_series(spark, src, f"{fn}(x)").values()) == [0.0] * 4, fn
+
+
+def test_stdvar_over_time_constant_window_is_zero(spark):
+    """A constant window has variance 0; unclamped, a window of 0.1s
+    read −1.7e-18."""
+    src = _source(spark, [({"name": "x"}, T0 + i * H, 0.1) for i in range(4)])
+    for fn in ("stdvar_over_time", "stddev_over_time"):
+        got = _series(spark, src, f"{fn}(x[3h])").values()
+        assert list(got) == [0.0] * 4, fn

@@ -59,67 +59,6 @@ def test_cusum_tiny_magnitude_series(spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming CUSUM: multi-chunk micro-batches (streaming/stateful.py)
-# ---------------------------------------------------------------------------
-
-
-class _FakeGroupState:
-    """Minimal stand-in for pyspark's GroupState: exists/get/update."""
-
-    def __init__(self):
-        self._value = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, value):
-        self._value = value
-
-
-def _run_cusum_fn(chunked_batches, warmup=4, threshold=3.0, slack=0.5):
-    import pandas as pd
-
-    from time_series_db_spark.streaming.stateful import _make_cusum_fn
-
-    fn = _make_cusum_fn(warmup, threshold, slack)
-    state = _FakeGroupState()
-    rows = []
-    for chunks in chunked_batches:
-        pdfs = (
-            pd.DataFrame({"ts": [t for t, _ in c], "value": [v for _, v in c]})
-            for c in chunks
-        )
-        for out in fn(("k",), pdfs, state):
-            rows.extend(
-                zip(out["ts"].tolist(), out["flag"].tolist(),
-                    out["score"].tolist())
-            )
-    return sorted(rows)
-
-
-def test_streaming_cusum_chunk_split_preserves_ts_order():
-    """applyInPandasWithState may hand one group's micro-batch to the
-    fold as SEVERAL Arrow chunks; a later chunk can carry EARLIER
-    samples.  The fold must concatenate before sorting — per-chunk
-    sorting feeds the warmup/Welford recurrence out of ts order and
-    silently mis-calibrates the frozen reference."""
-    vals = [10.0, 10.2, 9.8, 10.1, 10.0, 10.1, 14.0, 14.1, 14.2, 14.3]
-    samples = list(enumerate(vals))
-    # one batch split into chunks whose ts ranges interleave
-    split = _run_cusum_fn([[samples[5:], samples[:5]]])
-    whole = _run_cusum_fn([[samples]])
-    assert split == whole
-    assert any(f == 1.0 for _, f, _s in whole)  # the shift is detected
-    # and an empty-chunk iterator must still keep state / emit nothing
-    assert _run_cusum_fn([[[]]]) == []
-
-
-# ---------------------------------------------------------------------------
 # leakage_safe_split: cumulative weight quantization (pipeline/dedup.py)
 # ---------------------------------------------------------------------------
 

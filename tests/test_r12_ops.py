@@ -177,94 +177,6 @@ def test_ivf_kmeans_model_mode_rejects_only_explicit_fit_knobs(spark):
     assert ann.ivf_kmeans_topk(corpus, queries, k=2).count() > 0
 
 
-T0 = 1_704_067_200_000
-
-
-def _wire_lines(fmt: str, n: int, ts0: int, series: int = 50) -> str:
-    """n lines of the given wire format, n/series timestamps per series
-    starting at ts0 (ms), one minute apart."""
-    out = []
-    for i in range(n):
-        s, t = i % series, ts0 + (i // series) * 60_000
-        v = float(i % 97)
-        if fmt == "exposition":
-            out.append(f'wire_cpu{{host="h{s}"}} {v} {t}')
-        elif fmt == "lineprotocol":
-            out.append(f"wire,host=h{s} cpu={v} {t * 1_000_000}")
-        else:  # graphite
-            out.append(f"wire.cpu;host=h{s} {v} {t // 1000}")
-    return "\n".join(out) + "\n"
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize("fmt", ["exposition", "lineprotocol", "graphite"])
-def test_wire_ingest_per_batch_cost_is_store_size_invariant(
-    spark, tmp_path, fmt
-):
-    """Throughput certification of the three metrics text-wire streaming
-    legs (r11 verdict item #4), the same construction as the r11 doc
-    ingest certification: the same fresh micro-batch ingested into a
-    10× larger accumulated store must not get materially slower — the
-    store is append-only parquet (never read on the write path) and the
-    dedup state is bounded by the watermark, not the store.  All three
-    legs share streaming/ingest.py:start_text_wire_ingest, so one
-    parameterized test certifies the shared core under each parser.
-    Measured off-harness (BASELINE.md r12) per-batch medians are flat
-    in store size; the 2.5× bound leaves slack over timing noise while
-    failing anything resembling O(store) work per batch."""
-    import statistics
-    import time
-
-    from time_series_db_spark.sources.exposition import (
-        start_exposition_ingest,
-    )
-    from time_series_db_spark.sources.graphite import start_graphite_ingest
-    from time_series_db_spark.sources.lineprotocol import (
-        start_line_protocol_ingest,
-    )
-
-    starter = {
-        "exposition": start_exposition_ingest,
-        "lineprotocol": start_line_protocol_ingest,
-        "graphite": start_graphite_ingest,
-    }[fmt]
-
-    def run_once(src, store, ckpt) -> float:
-        t0 = time.time()
-        q = starter(
-            spark, str(src), str(store),
-            checkpoint_dir=str(ckpt), available_now=True,
-        )
-        q.awaitTermination(300)
-        return time.time() - t0
-
-    def median_batch_time(accum_lines: int, tag: str) -> float:
-        src = tmp_path / f"src_{tag}"
-        src.mkdir()
-        store = tmp_path / f"store_{tag}"
-        ckpt = tmp_path / f"ckpt_{tag}"
-        (src / "accum.txt").write_text(
-            _wire_lines(fmt, accum_lines, T0)
-        )
-        run_once(src, store, ckpt)  # accumulate (untimed)
-        times = []
-        for i in range(3):
-            # fresh timestamps 30+ min ahead: the watermark passes the
-            # accumulation range, so dedup state stays batch-bounded
-            (src / f"batch{i}.txt").write_text(
-                _wire_lines(fmt, 500, T0 + (30 + i) * 60_000)
-            )
-            times.append(run_once(src, store, ckpt))
-        return statistics.median(times[1:])  # first run absorbs JIT
-
-    t_small = median_batch_time(2_000, "1x")
-    t_big = median_batch_time(20_000, "10x")
-    assert t_big < t_small * 2.5, (
-        f"{fmt}: per-batch ingest cost grew with the accumulated store: "
-        f"{t_small:.2f}s @2k rows -> {t_big:.2f}s @20k rows"
-    )
-
-
 def test_correlate_matrix_auto_band_symbols(spark, sf_dir):
     """r12 two-decade fix: band_symbols='auto' holds bucket occupancy
     as the fleet grows (the fixed 4-symbol config dropped EVERY bucket

@@ -201,163 +201,6 @@ def test_simhash_stop_band_cap_drops_hot_bucket_keeps_pairs(spark):
         dedup.simhash_dedup_pairs(df, max_bucket=1)
 
 
-# ---------------------------------------------------------------------------
-# r13 state-scale certification (r12 verdict item #6): the remaining
-# stateful streaming legs — per-batch cost must be bounded by ACTIVE
-# state (live series / open sessions inside the watermark), not by the
-# accumulated history already processed through the query.
-# ---------------------------------------------------------------------------
-
-_T13 = 1_700_000_000_000
-
-
-def _run_stateful_batch(spark, src, out_dir, ckpt, build_query, name, text):
-    import time as _time
-
-    (src / name).write_text(text)
-    t0 = _time.time()
-    q = (
-        build_query(str(src))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return _time.time() - t0
-
-
-def _stateful_median_batch(spark, tmp_path, tag, build_query, accum_text,
-                           fresh_texts):
-    import statistics
-
-    src = tmp_path / f"src_{tag}"
-    src.mkdir()
-    out_dir = str(tmp_path / f"out_{tag}")
-    ckpt = str(tmp_path / f"ckpt_{tag}")
-    _run_stateful_batch(
-        spark, src, out_dir, ckpt, build_query, "accum.json", accum_text
-    )  # history (untimed)
-    times = [
-        _run_stateful_batch(
-            spark, src, out_dir, ckpt, build_query, f"b{i}.json", txt
-        )
-        for i, txt in enumerate(fresh_texts)
-    ]
-    return statistics.median(times[1:])  # first fresh run absorbs JIT
-
-
-@pytest.mark.slow
-def test_streaming_cusum_per_batch_cost_is_history_invariant(
-    spark, tmp_path
-):
-    """streaming_cusum keeps (n, mean, m2, S+, S-) per series — O(1)
-    state regardless of how many samples flowed through.  A fresh
-    500-row batch over the same 100-series fleet must cost the same
-    after 20k rows of history as after 2k.  The 2.5x bound is the wire
-    -ingest certification's noise allowance."""
-    import json
-
-    from time_series_db_spark.streaming import streaming_cusum
-
-    schema = "series_key string, ts long, value double"
-
-    def build_query(src_dir):
-        stream = spark.readStream.schema(schema).json(src_dir)
-        return streaming_cusum(stream, warmup=8, threshold=5.0, slack=0.5)
-
-    def lines(n, t_base):
-        return "\n".join(
-            json.dumps(
-                {
-                    "series_key": f"s{i % 100}",
-                    "ts": t_base + (i // 100) * 10_000,
-                    "value": 10.0 + (i % 7) * 0.1,
-                }
-            )
-            for i in range(n)
-        )
-
-    def median_for(accum_rows, tag):
-        fresh = [
-            lines(500, _T13 + (accum_rows // 100 + 1 + j) * 10_000_000)
-            for j in range(3)
-        ]
-        return _stateful_median_batch(
-            spark, tmp_path, f"cusum_{tag}", build_query,
-            lines(accum_rows, _T13), fresh,
-        )
-
-    t_small = median_for(2_000, "1x")
-    t_big = median_for(20_000, "10x")
-    assert t_big < t_small * 2.5, (
-        f"cusum per-batch cost grew with history: "
-        f"{t_small:.2f}s @2k rows -> {t_big:.2f}s @20k rows"
-    )
-    print(f"\ncusum per-batch: {t_small:.2f}s @2k -> {t_big:.2f}s @20k")
-
-
-@pytest.mark.slow
-def test_streaming_sessionize_per_batch_cost_is_history_invariant(
-    spark, tmp_path
-):
-    """streaming_sessionize state holds only OPEN session windows inside
-    the watermark; closed sessions are emitted and evicted.  A fresh
-    batch must cost the same after 10x more emitted-and-closed session
-    history."""
-    import datetime
-    import json
-
-    from time_series_db_spark.streaming.sessions import streaming_sessionize
-
-    schema = "user_id long, ts timestamp"
-
-    def build_query(src_dir):
-        stream = spark.readStream.schema(schema).json(src_dir)
-        return streaming_sessionize(
-            stream, gap_ms=600_000, watermark="1 hours"
-        )
-
-    def iso(ms):
-        return (
-            datetime.datetime(1970, 1, 1)
-            + datetime.timedelta(milliseconds=ms)
-        ).strftime("%Y-%m-%dT%H:%M:%S.000Z")
-
-    def lines(n, t_base):
-        # each user's events are 2h apart -> every event is its own
-        # session, closed as soon as the watermark passes it
-        return "\n".join(
-            json.dumps(
-                {
-                    "user_id": i % 100,
-                    "ts": iso(t_base + (i // 100) * 7_200_000),
-                }
-            )
-            for i in range(n)
-        )
-
-    def median_for(accum_rows, tag):
-        accum_span = (accum_rows // 100 + 1) * 7_200_000
-        fresh = [
-            lines(500, _T13 + accum_span + (j + 1) * 100 * 7_200_000)
-            for j in range(3)
-        ]
-        return _stateful_median_batch(
-            spark, tmp_path, f"sess_{tag}", build_query,
-            lines(accum_rows, _T13), fresh,
-        )
-
-    t_small = median_for(2_000, "1x")
-    t_big = median_for(20_000, "10x")
-    assert t_big < t_small * 2.5, (
-        f"sessionize per-batch cost grew with closed-session history: "
-        f"{t_small:.2f}s @2k rows -> {t_big:.2f}s @20k rows"
-    )
-    print(f"\nsessionize per-batch: {t_small:.2f}s @2k -> {t_big:.2f}s @20k")
-
-
 def test_hard_negatives_ivf_auto_nlist_matches_explicit(spark):
     """r13 occupancy-knob audit: nlist='auto' resolves to 16 at small n
     and produces the identical mined negatives; candidates_only returns

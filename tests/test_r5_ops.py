@@ -488,7 +488,7 @@ def test_promql_malformed_queries_rejected(spark):
 
 def test_pipeline_apis_reject_nonpositive_params(spark):
     from time_series_db_spark.pipeline.pack import pack_sequences, sample_stratified
-    from time_series_db_spark.streaming.sessions import sessionize, streaming_sessionize
+    from time_series_db_spark.streaming.sessions import sessionize
 
     df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
     ev = spark.createDataFrame([(1, T0)], "user_id long, ts long")
@@ -500,8 +500,6 @@ def test_pipeline_apis_reject_nonpositive_params(spark):
         sample_stratified(df.withColumnRenamed("text", "lang"), n_per_stratum=0)
     with pytest.raises(ValueError, match="gap"):
         sessionize(ev, gap_ms=0)
-    with pytest.raises(ValueError, match="gap"):
-        streaming_sessionize(ev, gap_ms=-5)
 
 
 def test_limit_ratio_partitions_exactly(spark):

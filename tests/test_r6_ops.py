@@ -413,38 +413,6 @@ def test_line_protocol_parses_multi_field_and_skips_nonnumeric(spark):
     assert by_name["mem"]["value"] == 7.25 and by_name["mem"]["ts"] == 2
 
 
-def test_streaming_exposition_scraper_to_query(spark, tmp_path):
-    """Scrape files land in a dir → streaming parse → metrics store →
-    readable through read_metrics with LWW dedup, same contract as the
-    JSON ingest leg."""
-    from time_series_db_spark.sources.exposition import (
-        start_exposition_ingest,
-    )
-    from time_series_db_spark.streaming.ingest import read_metrics
-
-    T0 = 1_704_067_200_000
-    src = tmp_path / "scrapes"
-    src.mkdir()
-    (src / "s1.txt").write_text(
-        f'error{{region="east"}} 20.0 {T0}\n'
-        f'error{{region="east"}} 30.0 {T0 + 60_000}\n'
-        "# comment\n"
-        f'error{{region="east"}} 99.0 {T0}\n'   # duplicate (series, ts)
-        f'error{{region="west"}} 7.0\n'          # no ts → dropped
-    )
-    store = str(tmp_path / "metrics")
-    q = start_exposition_ingest(
-        spark, str(src), store,
-        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = read_metrics(spark, store).collect()
-    got = {(r["series_key"], r["ts"]): r["value"] for r in rows}
-    assert len(got) == 2
-    assert got[("name:error,region:east", T0)] in (20.0, 99.0)  # ANY_WINS
-    assert got[("name:error,region:east", T0 + 60_000)] == 30.0
-
-
 # ---------------------------------------------------------------------------
 # document chunking
 # ---------------------------------------------------------------------------

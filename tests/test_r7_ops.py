@@ -604,65 +604,6 @@ def test_seasonal_adjust_m3ql_plan_validation():
 
 
 # ---------------------------------------------------------------------------
-# streaming ingest legs for the remaining wire formats
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_line_protocol_ingest_to_query(spark, tmp_path):
-    from time_series_db_spark.sources.lineprotocol import (
-        start_line_protocol_ingest,
-    )
-    from time_series_db_spark.streaming.ingest import read_metrics
-
-    T0 = 1_704_067_200_000
-    src = tmp_path / "lp"
-    src.mkdir()
-    (src / "t1.lp").write_text(
-        f"cpu,host=a usage=20.0 {T0 * 1_000_000}\n"
-        f"cpu,host=a usage=30.0 {(T0 + 60_000) * 1_000_000}\n"
-        f"cpu,host=a usage=99.0 {T0 * 1_000_000}\n"   # dup (series, ts)
-        "garbage line\n"
-    )
-    store = str(tmp_path / "metrics")
-    q = start_line_protocol_ingest(
-        spark, str(src), store,
-        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = read_metrics(spark, store).collect()
-    got = {(r["series_key"], r["ts"]): r["value"] for r in rows}
-    assert len(got) == 2
-    assert got[("host:a,name:cpu_usage", T0)] in (20.0, 99.0)
-    assert got[("host:a,name:cpu_usage", T0 + 60_000)] == 30.0
-
-
-def test_streaming_graphite_ingest_to_query(spark, tmp_path):
-    from time_series_db_spark.sources.graphite import start_graphite_ingest
-    from time_series_db_spark.streaming.ingest import read_metrics
-
-    T0 = 1_704_067_200_000
-    src = tmp_path / "carbon"
-    src.mkdir()
-    (src / "c1.txt").write_text(
-        f"sys.cpu;host=a 20.0 {T0 // 1000}\n"
-        f"sys.cpu;host=a 30.0 {(T0 + 60_000) // 1000}\n"
-        f"sys.cpu;host=a 99.0 {T0 // 1000}\n"   # dup (series, ts)
-        "# comment\n"
-    )
-    store = str(tmp_path / "metrics")
-    q = start_graphite_ingest(
-        spark, str(src), store,
-        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = read_metrics(spark, store).collect()
-    got = {(r["series_key"], r["ts"]): r["value"] for r in rows}
-    assert len(got) == 2
-    assert got[("host:a,name:sys.cpu", T0)] in (20.0, 99.0)
-    assert got[("host:a,name:sys.cpu", T0 + 60_000)] == 30.0
-
-
-# ---------------------------------------------------------------------------
 # BPE vocabulary induction
 # ---------------------------------------------------------------------------
 

@@ -655,157 +655,6 @@ def test_corpus_diff_statuses(spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming CUSUM (streaming/stateful.py:streaming_cusum)
-# ---------------------------------------------------------------------------
-
-def _stream_cusum_replay(vals, warmup, threshold, slack):
-    """Python replay of the calibrate-then-monitor recurrence."""
-    import math
-
-    n = 0
-    mean = m2 = sp = sn = 0.0
-    out = []
-    for x in vals:
-        if n < warmup:
-            if not math.isnan(x):
-                n += 1
-                d = x - mean
-                mean += d / n
-                m2 += d * (x - mean)
-            out.append((0.0, 0.0))
-            continue
-        sd = math.sqrt(m2 / n) if n else 0.0
-        if sd > 0 and not math.isnan(x):
-            k = slack * sd
-            sp = max(0.0, sp + (x - mean - k))
-            sn = max(0.0, sn + (mean - k - x))
-        score = max(sp, sn) / sd if sd > 0 else 0.0
-        out.append((1.0 if score > threshold else 0.0, score))
-    return out
-
-
-def test_streaming_cusum_detects_shift_across_batches(spark, tmp_path):
-    """Calibration in batch 1, a level shift arriving in batch 2: the
-    state store must carry the frozen reference AND the accumulated
-    statistics across the micro-batch boundary, firing mid-batch-2
-    exactly where the sequential replay fires."""
-    import json
-
-    from time_series_db_spark.streaming import streaming_cusum
-
-    base = [10.0, 10.2, 9.8, 10.1, 9.9, 10.0, 10.2, 9.8]
-    shifted = [10.8, 10.9, 10.7, 10.8, 10.9, 10.7, 10.8, 10.9]
-    vals = base + shifted
-    warmup, threshold, slack = 8, 4.0, 0.5
-
-    src = tmp_path / "cusum_in"
-    src.mkdir()
-    out_dir = str(tmp_path / "flags")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "series_key string, ts long, value double"
-
-    def run_batch(name, rows):
-        (src / name).write_text(
-            "\n".join(
-                json.dumps(dict(zip(("series_key", "ts", "value"), r)))
-                for r in rows
-            )
-        )
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            streaming_cusum(
-                stream, warmup=warmup, threshold=threshold, slack=slack
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    rows = [("svc|x", 1000 * i, v) for i, v in enumerate(vals)]
-    run_batch("b1.json", rows[:10])   # calibration + first 2 monitored
-    run_batch("b2.json", rows[10:])   # the shift accumulates here
-
-    got = {
-        r.ts: (r.flag, r.score)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    want = _stream_cusum_replay(vals, warmup, threshold, slack)
-    assert len(got) == len(vals)
-    for i, (flag, score) in enumerate(want):
-        g_flag, g_score = got[1000 * i]
-        assert g_flag == flag, f"sample {i}"
-        assert g_score == pytest.approx(score), f"sample {i}"
-    # the shift IS detected, and only after it starts
-    assert any(f == 1.0 for f, _ in want[len(base):])
-    assert all(f == 0.0 for f, _ in want[: len(base)])
-
-
-def test_streaming_cusum_nan_inherits_running_state(spark, tmp_path):
-    """A NaN sample mid-alarm must keep reporting the alarm (the batch
-    operator's documented contract) and must not consume calibration
-    slots during warmup."""
-    import json
-    import math
-
-    from time_series_db_spark.streaming import streaming_cusum
-
-    vals = [10.0, 10.2, 9.8, 10.1, float("nan"), 9.9, 10.0, 10.2, 9.8]
-    vals += [10.9, 10.8, float("nan"), 10.9, 10.8]
-    warmup, threshold, slack = 8, 3.0, 0.5
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    rows = [("s|1", 1000 * i, v) for i, v in enumerate(vals)]
-    (src / "b.json").write_text(
-        "\n".join(
-            json.dumps(dict(zip(("series_key", "ts", "value"), r)))
-            for r in rows
-        )
-    )
-    stream = spark.readStream.schema(
-        "series_key string, ts long, value double"
-    ).json(str(src))
-    q = (
-        streaming_cusum(stream, warmup=warmup, threshold=threshold,
-                        slack=slack)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.ts: (r.flag, r.score)
-           for r in spark.read.parquet(out_dir).collect()}
-    want = _stream_cusum_replay(vals, warmup, threshold, slack)
-    assert len(got) == len(vals)
-    for i, (flag, score) in enumerate(want):
-        assert got[1000 * i][0] == flag, f"sample {i}"
-        assert got[1000 * i][1] == pytest.approx(score), f"sample {i}"
-    # warmup consumed 8 FINITE samples (the NaN at index 4 didn't count),
-    # so monitoring starts at index 9; the alarm rides through the NaN
-    # at index 11 once the shift has accumulated
-    idx_nan2 = 11
-    assert got[1000 * idx_nan2] == got[1000 * (idx_nan2 + 1)] or (
-        got[1000 * idx_nan2][1] <= got[1000 * (idx_nan2 + 1)][1]
-    )
-
-
-def test_streaming_cusum_rejects_tiny_warmup(spark):
-    from time_series_db_spark.streaming import streaming_cusum
-
-    df = spark.createDataFrame(
-        [("a", 0, 1.0)], "series_key string, ts long, value double"
-    )
-    with pytest.raises(ValueError, match="warmup"):
-        streaming_cusum(df, warmup=1)
-
-
-# ---------------------------------------------------------------------------
 # frozen-tokenizer OOV rate + eval-side contamination
 # ---------------------------------------------------------------------------
 

@@ -525,58 +525,6 @@ def test_profile_stages_match_plan(spark, sf_dir):
         assert got == _plan_stage_names(q), q
 
 
-def test_streaming_per_second_rate_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: per-series (last_ts, last_value) state
-    survives micro-batch boundaries, so batch 2's first sample rates
-    against batch 1's last sample; counter resets emit nothing."""
-    from time_series_db_spark.streaming import streaming_per_second_rate
-
-    src = tmp_path / "rate_in"
-    src.mkdir()
-    out_dir = str(tmp_path / "rates")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "series_key string, ts long, value double"
-
-    def run_batch(name, rows):
-        (src / name).write_text(
-            "\n".join(json.dumps(dict(zip(("series_key", "ts", "value"), r)))
-                      for r in rows)
-        )
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            streaming_per_second_rate(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch("b1.json", [
-        ("cpu|a", T0, 100.0),
-        ("cpu|a", T0 + H, 160.0),     # rate 60/3600s
-        ("cpu|b", T0, 10.0),
-    ])
-    run_batch("b2.json", [
-        ("cpu|a", T0 + 2 * H, 163.6), # rates against batch-1 state
-        ("cpu|a", T0 + 3 * H, 100.0), # counter reset → no emission
-        ("cpu|a", T0 + 4 * H, 136.0), # rates against post-reset value
-        ("cpu|b", T0 + H, 13.6),      # first batch-2 sample of series b
-    ])
-
-    got = {
-        (r.series_key, r.ts): r.rate
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {
-        ("cpu|a", T0 + H): pytest.approx(60 / 3600),
-        ("cpu|a", T0 + 2 * H): pytest.approx(3.6 / 3600),
-        ("cpu|a", T0 + 4 * H): pytest.approx(36.0 / 3600),
-        ("cpu|b", T0 + H): pytest.approx(3.6 / 3600),
-    }
-
-
 def test_service_resolved_partitions(spark, sf_dir):
     """/_m3ql resolved_partitions body param: windows route the fetch
     through the federated source, overriding the default source."""
@@ -662,79 +610,6 @@ def test_tsdb_stats_flat_format(spark, sf_dir):
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
-
-
-def test_streaming_sessionize_gap_windows(spark, tmp_path):
-    """session_window streaming sessions: events within the gap merge
-    into one session, a gap strictly greater than 30m splits, and the
-    emitted spans are [first_event, last_event + gap) per the built-in
-    session_window contract."""
-    import json as _json
-
-    from time_series_db_spark.streaming.sessions import streaming_sessionize
-
-    GAP = 1_800_000
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    out_dir = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "sess_ckpt")
-    schema = "user_id long, ts timestamp"
-
-    def iso(ms):
-        import datetime
-
-        return (
-            datetime.datetime(1970, 1, 1)
-            + datetime.timedelta(milliseconds=ms)
-        ).strftime("%Y-%m-%dT%H:%M:%S.000Z")
-
-    def run_batch(name, rows):
-        (src / name).write_text(
-            "\n".join(
-                _json.dumps({"user_id": u, "ts": iso(t)}) for u, t in rows
-            )
-        )
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            streaming_sessionize(stream, gap_ms=GAP)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch("b1.json", [
-        (1, T0),                     # session A: two events 10m apart
-        (1, T0 + 600_000),
-        (1, T0 + 3 * H),             # session B: isolated event
-        (2, T0),                     # user 2: one session
-    ])
-    # append mode emits a session only once its window has passed the
-    # watermark (max event time − 2h = T0+1h): A and user-2 emit, B is
-    # still open in state
-    got = {
-        (r.user, r.session_start): (r.session_end, r.n_events, r.duration_ms)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {
-        (1, T0): (T0 + 600_000 + GAP, 2, 600_000 + GAP),
-        (2, T0): (T0 + GAP, 1, GAP),
-    }
-
-    # a later batch advances the watermark past B's close → B emits from
-    # state carried across micro-batch runs (checkpointed)
-    run_batch("b2.json", [(3, T0 + 8 * H)])
-    got = {
-        (r.user, r.session_start): (r.session_end, r.n_events, r.duration_ms)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {
-        (1, T0): (T0 + 600_000 + GAP, 2, 600_000 + GAP),
-        (1, T0 + 3 * H): (T0 + 3 * H + GAP, 1, GAP),
-        (2, T0): (T0 + GAP, 1, GAP),
-    }
 
 
 def test_batch_sessionize_semantics(spark):

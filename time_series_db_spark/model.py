@@ -169,27 +169,3 @@ class SeriesFrame:
             .withColumn("labels", labels_from_key_expr(F.col("series_key")))
             .select("series_key", "labels", "alias")
         )
-
-    def rekey(self) -> "SeriesFrame":
-        """Recompute series_key after a label-mutating stage."""
-        return self.with_df(self.df.withColumn("series_key", series_key_expr()))
-
-
-def align_to_grid(df: DataFrame, step: int, ts_col: str = "ts",
-                  order_col: str = None) -> DataFrame:
-    """Floor-align timestamps to the step grid with last-write-wins dedup.
-
-    Mirrors the reference's decode-time alignment: ``minTs + k*step`` floor,
-    last write wins (TimeSeriesUnfoldAggregator.java:305-320). ``order_col``
-    supplies the deterministic "last" (ingest order); map-side partial
-    aggregation makes this a single shuffle on (series_key, grid_ts).
-    """
-    keyed = df.withColumn("__grid_ts", F.col(ts_col) - (F.col(ts_col) % F.lit(step)))
-    out = (
-        keyed.groupBy("series_key", "alias", "__grid_ts")
-        .agg(F.expr(f"max_by(value, {order_col or ts_col})").alias("value"))
-        .withColumnRenamed("__grid_ts", "ts")
-        .withColumn("labels", labels_from_key_expr(F.col("series_key")))
-        .select(*SAMPLE_COLS)
-    )
-    return out

@@ -190,12 +190,6 @@ def range_(sf: SeriesFrame, keys: list[str] = ()) -> SeriesFrame:
     return _grouped(sf, list(keys), expr)
 
 
-def stddev(sf: SeriesFrame, keys: list[str] = ()) -> SeriesFrame:
-    """Population stddev across series per timestamp (summarize/sort share
-    the same summarizer family — stage/summarize/*.java)."""
-    return _grouped(sf, list(keys), F.stddev_pop("value"))
-
-
 def percentile_of_series(
     sf: SeriesFrame,
     percentiles: list[float],
@@ -260,58 +254,18 @@ def percentile_of_series(
     return sf.with_df(df)
 
 
-def _parse_bucket_upper(bucket_range: str) -> float:
-    """Upper bound of a histogram bucket-range tag value — port of
-    HistogramPercentileStage.BucketInfo.parseBucket (duration ranges →
-    millis; ``+Inf`` upper collapses to the lower bound; the delimiter
-    dash skips a leading sign and exponent signs)."""
-    import re as _re
-
-    s = bucket_range
-    start = 1 if s.startswith("-") else 0
-    delim = -1
-    for i in range(start, len(s)):
-        if s[i] == "-" and not (i > 0 and s[i - 1] in "eE"):
-            delim = i
-            break
-    if delim < 0:
-        raise ValueError(f"Invalid bucket range format: {bucket_range}")
-    left, right = s[:delim], s[delim + 1 :]
-
-    dur = _re.compile(r"^(-?\d+(?:\.\d+)?)(ns|us|µs|ms|s|m|h|d)$")
-    to_ms = {"ns": 1e-6, "us": 1e-3, "µs": 1e-3, "ms": 1.0,
-             "s": 1e3, "m": 6e4, "h": 3.6e6, "d": 8.64e7}
-
-    def _duration_ms(text: str) -> float:
-        m = dur.match(text)
-        if not m:
-            raise ValueError(text)
-        return float(m.group(1)) * to_ms[m.group(2)]
-
-    def _parse(left_v: str, right_v: str, num) -> float:
-        low = float("-inf") if left_v in ("-Inf", "-infinity") else num(left_v)
-        if right_v in ("+Inf", "Inf", "infinity", "+infinity"):
-            return low  # infinity bucket: upper == lower
-        return num(right_v)
-
-    try:
-        return _parse(left, right, _duration_ms)
-    except ValueError:
-        return _parse(left, right, float)
-
-
 #: first '-' that is neither the leading sign nor an exponent marker
-#: splits "low-high" — same rule as _parse_bucket_upper's scan loop
+#: splits "low-high" (HistogramPercentileStage.BucketInfo.parseBucket)
 _SPLIT_RE = r"^(-?.*?)(?<![eE])-(.+)$"
 _DUR_RE = r"^(-?\d+(?:\.\d+)?)(ns|us|µs|ms|s|m|h|d)$"
 
 
 def _bucket_upper_expr(range_col: Column) -> Column:
-    """In-plan rendering of :func:`_parse_bucket_upper`: bucket upper
-    bound from the "low-high" range tag, durations normalized to ms,
-    +Inf upper falling back to the lower bound. Pure Catalyst
-    (regexp_extract / try_cast), so bucket parsing never leaves the
-    executors."""
+    """Bucket upper bound from the "low-high" range tag, a port of
+    HistogramPercentileStage.BucketInfo.parseBucket: durations
+    normalized to ms, +Inf upper falling back to the lower bound. Pure
+    Catalyst (regexp_extract / try_cast), so bucket parsing never leaves
+    the executors."""
     left = F.regexp_extract(range_col, _SPLIT_RE, 1)
     right = F.regexp_extract(range_col, _SPLIT_RE, 2)
 
@@ -630,18 +584,24 @@ def histogram_cdf(
 # ---------------------------------------------------------------------------
 
 
+def _variance(v: Column) -> Column:
+    """Population variance as E[v²] − E[v]², clamped at 0: on equal
+    values fp rounding can leave the difference a few ulps negative,
+    which would make stdvar negative and stddev NaN (sqrt(−ε)) where
+    Prometheus gives 0. NaN stays NaN."""
+    return F.greatest(F.avg(v * v) - F.avg(v) * F.avg(v), F.lit(0.0))
+
+
 def stddev(sf: SeriesFrame, keys: list[str] = (), without: bool = False) -> SeriesFrame:
-    """PromQL stddev: population standard deviation across series per ts."""
-    v = F.col("value")
-    expr = F.sqrt(F.avg(v * v) - F.avg(v) * F.avg(v))
+    """PromQL stddev (and M3QL stdev): population standard deviation
+    across series per ts."""
+    expr = F.sqrt(_variance(F.col("value")))
     return _grouped(sf, list(keys), expr, without=without)
 
 
 def stdvar(sf: SeriesFrame, keys: list[str] = (), without: bool = False) -> SeriesFrame:
     """PromQL stdvar: population variance across series per ts."""
-    v = F.col("value")
-    expr = F.avg(v * v) - F.avg(v) * F.avg(v)
-    return _grouped(sf, list(keys), expr, without=without)
+    return _grouped(sf, list(keys), _variance(F.col("value")), without=without)
 
 
 def group_(sf: SeriesFrame, keys: list[str] = (), without: bool = False) -> SeriesFrame:

@@ -571,6 +571,17 @@ def _range_frame(sf: SeriesFrame, window_ms: int):
     return _series_window().rangeBetween(-(int(window_ms) - sf.step), 0)
 
 
+def _window_variance(w) -> Column:
+    """Population variance of ``value`` over window ``w``, clamped at 0:
+    fp rounding can push the moment difference a few ulps negative for
+    a constant window, and sqrt(-ε) would turn a legitimate 0 into NaN
+    (the oracle clamps identically)."""
+    v = F.col("value")
+    return F.greatest(
+        F.avg(v * v).over(w) - F.avg(v).over(w) * F.avg(v).over(w), F.lit(0.0)
+    )
+
+
 def over_time(sf: SeriesFrame, window_ms: int, fn: str) -> SeriesFrame:
     """PromQL *_over_time family — FunctionType.{AVG,MIN,MAX,SUM,COUNT,
     LAST,STDDEV,PRESENT}_OVER_TIME: aggregate the raw samples in each
@@ -589,17 +600,8 @@ def over_time(sf: SeriesFrame, window_ms: int, fn: str) -> SeriesFrame:
         "sum": lambda: F.sum(v).over(w),
         "count": lambda: F.count(v).over(w).cast("double"),
         "last": lambda: F.last(v).over(w),
-        # population stddev, the Prometheus definition; the moment
-        # difference is clamped at 0 — fp rounding can push it a few
-        # ulps negative for a constant window, and sqrt(-ε) would turn
-        # a legitimate 0 into NaN (the oracle clamps identically)
-        "stddev": lambda: F.sqrt(
-            F.greatest(
-                F.avg(v * v).over(w)
-                - F.avg(v).over(w) * F.avg(v).over(w),
-                F.lit(0.0),
-            )
-        ),
+        # population stddev, the Prometheus definition
+        "stddev": lambda: F.sqrt(_window_variance(w)),
         "present": lambda: F.lit(1.0),
     }
     if fn not in aggs:
@@ -768,9 +770,7 @@ def resets_over_time(sf: SeriesFrame, window_ms: int) -> SeriesFrame:
 def stdvar_over_time(sf: SeriesFrame, window_ms: int) -> SeriesFrame:
     """PromQL stdvar_over_time(v[w]): population variance over the
     trailing window — FunctionType.STDVAR_OVER_TIME."""
-    w = _range_frame(sf, window_ms)
-    v = F.col("value")
-    df = sf.df.withColumn("value", F.avg(v * v).over(w) - F.avg(v).over(w) ** 2)
+    df = sf.df.withColumn("value", _window_variance(_range_frame(sf, window_ms)))
     return sf.with_df(df.select(*SAMPLE_COLS))
 
 

@@ -425,8 +425,7 @@ def pack_bins_bfd(
     so ``budget − bin_fill`` is its padding.
 
     The greedy loop is inherently sequential, so it runs per shard in
-    ONE Arrow ``applyInPandas`` pass — the same bounded-sequential-unit
-    shape as the stateful streaming ops; shards are hash-balanced, so
+    ONE Arrow ``applyInPandas`` pass; shards are hash-balanced, so
     skew is bounded by a shard's token mass, never the corpus.  There
     is deliberately NO SQL oracle (a greedy recurrence has no
     reasonable relational replay); correctness is pinned by an exact

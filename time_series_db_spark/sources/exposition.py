@@ -169,34 +169,3 @@ def parse_exposition(lines: DataFrame, column: str = "line") -> DataFrame:
         "ts",
         "value",
     )
-
-
-def start_exposition_ingest(
-    spark,
-    source_dir: str,
-    table_path: str,
-    *,
-    ooo_cutoff: str = "10 minutes",
-    block_ms: int | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Continuous scraper leg: text-exposition files landing in
-    ``source_dir`` (scrape dumps) stream-parsed into the partitioned
-    metrics table at ``table_path`` — the same watermark/dedup contract
-    as the JSON ingest leg (streaming/ingest.py:start_ingest), so
-    exposition-fed and bulk-fed stores behave identically to readers:
-    late samples beyond ``ooo_cutoff`` drop, duplicate (series, ts)
-    rows inside the watermark dedup first-write-wins, and replayed
-    epochs are absorbed by the read path's ANY_WINS merge.
-
-    Lines without a timestamp are dropped (a store row needs one);
-    comment/blank/malformed lines are skipped by the parser.
-    """
-    from time_series_db_spark.streaming.ingest import start_text_wire_ingest
-
-    return start_text_wire_ingest(
-        spark, source_dir, table_path, parse_exposition,
-        ooo_cutoff=ooo_cutoff, block_ms=block_ms,
-        checkpoint_dir=checkpoint_dir, available_now=available_now,
-    )

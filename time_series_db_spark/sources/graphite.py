@@ -27,7 +27,7 @@ parses at text-scan speed, zero Python, zero shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from time_series_db_spark.model import series_key_expr
@@ -155,28 +155,4 @@ def parse_graphite(lines: DataFrame, column: str = "line") -> DataFrame:
         "labels",
         "ts",
         "value",
-    )
-
-
-def start_graphite_ingest(
-    spark,
-    source_dir: str,
-    table_path: str,
-    *,
-    ooo_cutoff: str = "10 minutes",
-    block_ms: int | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Continuous carbon-relay leg: Graphite plaintext files landing in
-    ``source_dir`` stream-parsed into the partitioned metrics table —
-    same watermark/dedup contract as the exposition scraper and the JSON
-    ingest leg (streaming/ingest.py:start_text_wire_ingest).  Graphite
-    lines always carry a timestamp, so nothing is ts-dropped."""
-    from time_series_db_spark.streaming.ingest import start_text_wire_ingest
-
-    return start_text_wire_ingest(
-        spark, source_dir, table_path, parse_graphite,
-        ooo_cutoff=ooo_cutoff, block_ms=block_ms,
-        checkpoint_dir=checkpoint_dir, available_now=available_now,
     )

@@ -129,13 +129,12 @@ def parse_line_protocol(lines: DataFrame, column: str = "line") -> DataFrame:
         # unescaped spaces only
         .withColumn("__parts", F.split("__l", _UNESC_SPACE))
         .where(F.size("__parts") == 3)
-        # try_element_at, not element_at: predicate fusion in the
-        # streaming plan can collapse the downstream __ts filter into
-        # one conjunction whose codegen subexpression elimination
-        # evaluates the index-3 access BEFORE the size guard — ANSI
-        # element_at then kills the whole query on the first malformed
-        # line (observed with the micro-batch plan; batch plans kept
-        # the filters separate)
+        # try_element_at, not element_at: predicate fusion can collapse
+        # the downstream __ts filter into one conjunction whose codegen
+        # subexpression elimination evaluates the index-3 access BEFORE
+        # the size guard — ANSI element_at then kills the whole query on
+        # the first malformed line (observed in a micro-batch plan;
+        # batch plans kept the filters separate)
         .select(
             F.try_element_at("__parts", F.lit(1)).alias("__series"),
             F.try_element_at("__parts", F.lit(2)).alias("__fields"),
@@ -208,27 +207,4 @@ def parse_line_protocol(lines: DataFrame, column: str = "line") -> DataFrame:
         "labels",
         "ts",
         "value",
-    )
-
-
-def start_line_protocol_ingest(
-    spark,
-    source_dir: str,
-    table_path: str,
-    *,
-    ooo_cutoff: str = "10 minutes",
-    block_ms: int | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Continuous telegraf-style leg: Influx line-protocol files landing
-    in ``source_dir`` stream-parsed into the partitioned metrics table —
-    same watermark/dedup contract as the exposition scraper and the JSON
-    ingest leg (streaming/ingest.py:start_text_wire_ingest)."""
-    from time_series_db_spark.streaming.ingest import start_text_wire_ingest
-
-    return start_text_wire_ingest(
-        spark, source_dir, table_path, parse_line_protocol,
-        ooo_cutoff=ooo_cutoff, block_ms=block_ms,
-        checkpoint_dir=checkpoint_dir, available_now=available_now,
     )

@@ -18,12 +18,6 @@ from time_series_db_spark.streaming.maintenance import (  # noqa: F401
     compact_blocks,
     list_blocks,
 )
-from time_series_db_spark.streaming.stateful import (  # noqa: F401
-    CUSUM_OUTPUT_SCHEMA,
-    RATE_OUTPUT_SCHEMA,
-    streaming_cusum,
-    streaming_per_second_rate,
-)
 from time_series_db_spark.streaming.rules import (  # noqa: F401
     apply_rule_frame,
     backfill_recording_rule,

@@ -68,7 +68,7 @@ INGEST_SCHEMA = T.StructType(
 
 #: physical schema of the metrics table (block is the partition column).
 #: Only this package writes the table (the streaming sink,
-#: :func:`write_blocks`, the wire ingests, the rule sinks), so readers
+#: :func:`write_blocks`, the rule sinks), so readers
 #: pin the schema instead of inferring it: inference reads a parquet
 #: footer in a Spark job on every read.
 METRICS_SCHEMA = T.StructType(
@@ -386,39 +386,3 @@ def read_metrics(
     return dedup_samples(
         scan_metrics(spark, table_path, min_ts, max_ts, block_ms)
     )
-
-
-def start_text_wire_ingest(
-    spark,
-    source_dir: str,
-    table_path: str,
-    parse_fn,
-    *,
-    ooo_cutoff: str = "10 minutes",
-    block_ms: int | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Shared scraper leg for the text wire formats: files of lines
-    landing in ``source_dir`` are stream-parsed by ``parse_fn`` (any of
-    the three wire parsers — exposition / Influx line protocol /
-    Graphite plaintext, each a pure-Catalyst ``lines → (series_key,
-    labels, ts, value)`` transform) into the partitioned metrics table
-    at ``table_path``, under the same watermark/dedup contract as the
-    JSON ingest leg (:func:`start_ingest`): late samples beyond
-    ``ooo_cutoff`` drop, duplicate (series, ts) rows inside the
-    watermark dedup first-write-wins, replayed epochs are absorbed by
-    the read path's ANY_WINS merge.  Lines without a timestamp are
-    dropped (a store row needs one)."""
-    block = int(block_ms or DEFAULT_BLOCK_MS)
-    lines = spark.readStream.text(source_dir)
-    samples = (
-        parse_fn(lines, "value")
-        .where(F.col("ts").isNotNull())
-        .withColumn("block", F.col("ts") - F.col("ts") % F.lit(block))
-        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
-        .withWatermark("event_time", ooo_cutoff)
-        .dropDuplicatesWithinWatermark(["series_key", "ts"])
-        .drop("event_time")
-    )
-    return start_block_sink(samples, table_path, checkpoint_dir, available_now)

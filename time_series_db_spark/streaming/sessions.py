@@ -1,11 +1,9 @@
-"""Event sessionization — gap-based user sessions, batch and streaming.
+"""Event sessionization — gap-based user sessions over a batch frame.
 
 A training-data pipeline's session construction step (grouping raw
 events into user sessions before feature extraction), beyond the
-reference's query surface. Batch is pure window expressions with a
-DuckDB oracle (catalog ``sessionize_events``); streaming uses Spark's
-built-in ``session_window`` aggregation with a watermark — no custom
-state code, late events past the watermark are dropped by the engine.
+reference's query surface: pure window expressions with a DuckDB oracle
+(catalog ``sessionize_events``).
 """
 
 from __future__ import annotations
@@ -61,44 +59,5 @@ def sessionize(
         )
         .withColumn(
             "duration_ms", (F.col("session_end") - F.col("session_start"))
-        )
-    )
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_ms: int = 1_800_000,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming gap sessions via the built-in ``session_window``
-    aggregation: the engine merges events into dynamic windows that
-    close ``gap_ms`` after the last event, emitting each session once
-    its window is final under the watermark (late events past it are
-    dropped — the streaming-ingest ooo-cutoff discipline).
-
-    Output schema matches :func:`sessionize` minus ``session_id``
-    (stream sessions are identified by their start; a global per-user
-    ordinal would require total history).
-    """
-    if gap_ms <= 0:
-        raise ValueError("session gap must be a positive duration")
-    gap = f"{int(gap_ms) // 1000} seconds"
-    ts = F.col(ts_col).cast("timestamp")
-    return (
-        events.select(F.col(user_col).alias("user"), ts.alias("__t"))
-        .withWatermark("__t", watermark)
-        .groupBy("user", F.session_window(F.col("__t"), gap).alias("__w"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            "user",
-            F.unix_millis(F.col("__w.start")).alias("session_start"),
-            F.unix_millis(F.col("__w.end")).alias("session_end"),
-            "n_events",
-            (
-                F.unix_millis(F.col("__w.end"))
-                - F.unix_millis(F.col("__w.start"))
-            ).alias("duration_ms"),
         )
     )
